@@ -243,7 +243,10 @@ def theil_sen(df: DataFrame, field: str = "value",
         raise ValueError(f"bucket needs a fixed window spec, got {bucket!r}")
     keys = list(partition_by)
     col = F.col(field).cast("double")
-    valid = col.isNotNull() & ~F.isnan(col)
+    # a NULL time has no bucket: drop the row rather than form a NULL
+    # bucket position (the keyed numpy path cannot take one)
+    valid = (col.isNotNull() & ~F.isnan(col)
+             & F.col(time_col).isNotNull())
     bpos = F.floor(F.unix_millis(F.col(time_col)) / F.lit(b_ms))
     if keys:
         return _theil_sen_grouped(df, keys, valid, bpos, col)

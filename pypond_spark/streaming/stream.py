@@ -16,11 +16,39 @@ Mapping of the reference's push-based stream mode:
   carried (last_ts, last_value) state per series key, so state survives
   micro-batch boundaries exactly like the reference's long-lived processor
   objects.
+
+Kernel contract.  Every time-ordered stateful operator (rate, gaps,
+sessions, throttle, transitions, cumulative, align, fill, ewma, holt,
+holt_winters, rolling, zscore, cusum, xchart) is a pure numpy kernel that
+the one driver :func:`_keyed_scan` runs per series key::
+
+    kernel(state, t_ms, pdf) -> (new_state, {out_col: array})
+
+- ``state`` is the tuple the previous call returned for this key (``None``
+  before the first call); a ``new_state`` of ``None`` leaves it unchanged;
+- ``pdf`` holds ALL of the key's rows of one micro-batch (never empty),
+  stable-sorted by ``(time_col, tiebreak)``; ``t_ms`` is its event time as
+  int64 epoch-ms;
+- the dict maps every output column except the keys (the driver spreads
+  those) to an equal-length array; zero-length arrays or an empty dict
+  emit no rows.  NaN and None both leave the operator as NULL.
+
+A kernel touches no Spark, so it runs on plain pandas frames: cutting a
+series at any row and passing the first call's state into the second
+emits the same rows as one call over the whole series — the
+cross-micro-batch contract, tested directly on the kernels.  The claim
+gates (:func:`stream_first_seen` and the two near-duplicate gates) are
+not kernels: they run on event-time timeouts without a time sort, through
+:func:`_claim_gate`.
 """
 
 from __future__ import annotations
 
+import json
+import math
+import re
 import uuid
+from functools import partial
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -95,44 +123,67 @@ def windowed_stream_aggregate(
     return out, mode
 
 
-def _keyed(sdf: DataFrame, keys: list[str]) -> tuple[DataFrame, list[str], bool]:
-    """Stateful streaming ops need >=1 grouping expression (Spark's
-    StatefulOpClusteredDistribution rejects an empty key list). With no
-    series key, inject a constant key — single state partition, dropped
-    from the output."""
-    if keys:
-        return sdf, keys, False
-    return sdf.withColumn("__k", F.lit(0)), ["__k"], True
+def _keyed_scan(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
+                tiebreak: str | None, state_fields: list[T.StructField],
+                out_fields: list[T.StructField], kernel) -> DataFrame:
+    """Run ``kernel`` (contract in the module docstring) per series key
+    across micro-batches: ``applyInPandasWithState``, append mode, no
+    timeout.  Output is ``(*partition_by, *out_fields)``; the state row
+    is ``state_fields``.
+
+    Spark's StatefulOpClusteredDistribution rejects an empty key list, so
+    a keyless stream gets a constant key ``__k`` (one state partition,
+    dropped from the output).  A group larger than the Arrow batch size
+    arrives as several chunks in shuffle order: all of them are
+    concatenated before ONE stable mergesort, because sorting chunks
+    independently silently corrupts order-dependent state, and rows that
+    share the full sort key keep their concatenated order (deterministic
+    per run, shuffle-dependent across runs — hence ``tiebreak``)."""
+    keys = list(partition_by)
+    dummy = not keys
+    if dummy:
+        sdf, keys = sdf.withColumn("__k", F.lit(0)), ["__k"]
+    order = [time_col, tiebreak] if tiebreak else [time_col]
+    names = [f.name for f in out_fields]
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        chunks = [p for p in pdfs if len(p)]
+        if not chunks:
+            return
+        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
+               else chunks[0]).sort_values(order, kind="mergesort")
+        new, cols = kernel(state.get if state.exists else None,
+                           _t_ms(pdf, time_col), pdf)
+        if new is not None:
+            state.update(new)
+        n = len(cols[names[0]]) if cols else 0
+        if n:
+            data = {k: np.full(n, kv, dtype=object)
+                    for k, kv in zip(keys, key)}
+            data.update((c, cols[c]) for c in names)
+            yield pd.DataFrame(data)
+
+    out = sdf.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=T.StructType(
+            [sdf.schema[k] for k in keys] + out_fields),
+        stateStructType=T.StructType(state_fields),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout)
+    return out.drop("__k") if dummy else out
 
 
-def _whole_group(pdfs: Iterator[pd.DataFrame], time_col: str,
-                 tiebreak: Sequence[str] = ()) -> pd.DataFrame:
-    """Concatenate ALL Arrow chunks of the group, then sort by time.
+def _longs(*names: str) -> list[T.StructField]:
+    return [T.StructField(n, T.LongType()) for n in names]
 
-    applyInPandasWithState splits a group larger than the Arrow batch size
-    into multiple chunks in shuffle order — sorting chunks independently
-    silently corrupts any order-dependent state computation.
 
-    ``tiebreak`` columns extend the sort key for operators whose result
-    depends on the order of equal-timestamp events (e.g. EWMA); without
-    one, the stable mergesort preserves concatenated chunk order, which is
-    deterministic per run but shuffle-dependent across runs.
-    """
-    chunks = list(pdfs)
-    if not chunks:
-        return pd.DataFrame()
-    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    # stable mergesort: rows sharing the full sort key keep their
-    # concatenated chunk order (the default unstable quicksort made
-    # stateful rate/align/fill output order-dependent across runs)
-    return pdf.sort_values([time_col, *tiebreak], kind="mergesort")
+def _doubles(*names: str) -> list[T.StructField]:
+    return [T.StructField(n, T.DoubleType()) for n in names]
 
 
 def _t_ms(pdf: pd.DataFrame, time_col: str) -> "np.ndarray":
-    """Event times of a (sorted) group chunk as int64 epoch-ms — the
-    vectorized twin of the old per-row ``row[time_col].value // 10**6``
-    (``astype('int64')`` is ns-since-epoch for both naive and tz-aware
-    pandas datetime columns)."""
+    """Event times of a group as int64 epoch-ms (``astype('int64')`` is
+    ns-since-epoch for both naive and tz-aware pandas datetime columns)."""
     return (pdf[time_col].astype("int64") // 10**6).to_numpy()
 
 
@@ -141,62 +192,49 @@ def _f64(pdf: pd.DataFrame, col: str) -> "np.ndarray":
     return pdf[col].to_numpy(dtype="float64", na_value=np.nan)
 
 
-def _key_frame(key, keys: list[str], n: int, cols: dict) -> pd.DataFrame:
-    """Output frame builder: the group key broadcast over ``n`` rows,
-    followed by the value columns (all length ``n``) in ``cols`` order."""
-    data = {k: np.full(n, kv, dtype=object) for k, kv in zip(keys, key)}
-    data.update(cols)
-    return pd.DataFrame(data)
+def _carry(pdf: pd.DataFrame, carry: Sequence[str]) -> dict:
+    """Pass-through columns, one value per input row."""
+    return {c: pdf[c].to_numpy(dtype=object) for c in carry}
 
 
-def _rate_state_fn(fields: list[str], keys: list[str], time_col: str,
-                   allow_negative: bool, counter_wrap: float | None = None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized: consecutive-pair rates via shifted numpy arrays
-        (state-prepended), elementwise IEEE-identical to the former
-        per-row loop ((cv - pv) / ((cur - prev) / 1000.0), same wrap
-        add), so drained output is bit-for-bit unchanged."""
-        if state.exists:
-            prev_ms, prev_vals = state.get[0], list(state.get[1:])
-        else:
-            prev_ms, prev_vals = None, [None] * len(fields)
-        pdf = _whole_group(pdfs, time_col)
-        cols = keys + ["begin_ms", "end_ms"] + [f"{f}_rate" for f in fields]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
-        t_new = _t_ms(pdf, time_col)
-        vals = {f: _f64(pdf, f) for f in fields}
-        if prev_ms is not None:
-            t_all = np.concatenate(
-                [np.array([prev_ms], dtype=np.int64), t_new])
-            v_all = {f: np.concatenate(
-                [np.array([np.nan if prev_vals[i] is None
-                           else prev_vals[i]]), vals[f]])
-                for i, f in enumerate(fields)}
-        else:
-            t_all, v_all = t_new, vals
-        state.update((int(t_all[-1]),
-                      *(None if np.isnan(v_all[f][-1]) else float(v_all[f][-1])
-                        for f in fields)))
-        if len(t_all) < 2:
-            return  # yield nothing: no output rows for this group
-        begin, end = t_all[:-1], t_all[1:]
-        dt_sec = (end - begin) / 1000.0
-        out_cols = {"begin_ms": begin, "end_ms": end}
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for f in fields:
-                pv, cv = v_all[f][:-1], v_all[f][1:]
-                delta = cv - pv
-                if counter_wrap is not None:
-                    delta = np.where(delta < 0, delta + counter_wrap, delta)
-                r = delta / dt_sec
-                bad = np.isnan(pv) | np.isnan(cv) | (dt_sec == 0)
-                if not allow_negative:
-                    bad |= ~np.isnan(r) & (r < 0)
-                out_cols[f"{f}_rate"] = np.where(bad, np.nan, r)
-        yield _key_frame(key, keys, len(begin), out_cols)
+def _prepend(head, arr: "np.ndarray") -> "np.ndarray":
+    """``arr`` with one carried value in front (None -> NaN)."""
+    return np.concatenate([np.array([head], dtype=arr.dtype), arr])
 
-    return fn
+
+def _with_prev(state, t, vals: list) -> tuple:
+    """Prepend the carried ``(last_ts, *last_values)`` state row."""
+    if state is None:
+        return t, vals
+    return (_prepend(state[0], t),
+            [_prepend(p, v) for p, v in zip(state[1:], vals)])
+
+
+def _last_row(t, vals: list) -> tuple:
+    """The ``(last_ts, *last_values)`` state row, NaN stored as None."""
+    return (int(t[-1]),
+            *(None if np.isnan(v[-1]) else float(v[-1]) for v in vals))
+
+
+def _rate_kernel(state, t, pdf, *, fields, allow_negative, counter_wrap):
+    """Consecutive-pair rates via shifted numpy arrays (state-prepended):
+    elementwise ``(cv - pv) / ((cur - prev) / 1000.0)`` plus the wrap
+    add, IEEE-identical to the sequential per-pair formula."""
+    t, vals = _with_prev(state, t, [_f64(pdf, f) for f in fields])
+    dt_sec = (t[1:] - t[:-1]) / 1000.0
+    out = {"begin_ms": t[:-1], "end_ms": t[1:]}
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for f, v in zip(fields, vals):
+            pv, cv = v[:-1], v[1:]
+            delta = cv - pv
+            if counter_wrap is not None:
+                delta = np.where(delta < 0, delta + counter_wrap, delta)
+            r = delta / dt_sec
+            bad = np.isnan(pv) | np.isnan(cv) | (dt_sec == 0)
+            if not allow_negative:
+                bad |= ~np.isnan(r) & (r < 0)
+            out[f"{f}_rate"] = np.where(bad, np.nan, r)
+    return _last_row(t, vals), out
 
 
 def stream_rate(
@@ -218,49 +256,25 @@ def stream_rate(
         raise ValueError("counter_wrap corrects negative deltas; "
                          "allow_negative=False would mask the correction")
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("begin_ms", T.LongType()),
-           T.StructField("end_ms", T.LongType())]
-        + [T.StructField(f"{f}_rate", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField("ts", T.LongType())]
-        + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _rate_state_fn(fields, keys, time_col, allow_negative,
-                       float(counter_wrap) if counter_wrap is not None
-                       else None),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, None,
+        _longs("ts") + _doubles(*(f"v{i}" for i in range(len(fields)))),
+        _longs("begin_ms", "end_ms") + _doubles(*(f"{f}_rate"
+                                                  for f in fields)),
+        partial(_rate_kernel, fields=fields, allow_negative=allow_negative,
+                counter_wrap=None if counter_wrap is None
+                else float(counter_wrap)))
 
 
-def _gaps_state_fn(keys: list[str], time_col: str, gap_ms: int):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized: one ``np.diff`` over the state-prepended sorted
-        times replaces the former per-row loop — integer arithmetic, so
-        output is identical by construction."""
-        prev_ms = state.get[0] if state.exists else None
-        pdf = _whole_group(pdfs, time_col)
-        cols = keys + ["gap_start_ms", "gap_end_ms", "gap_ms"]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
-        t = _t_ms(pdf, time_col)
-        t_all = (np.concatenate([np.array([prev_ms], dtype=np.int64), t])
-                 if prev_ms is not None else t)
-        state.update((int(t_all[-1]),))
-        d = np.diff(t_all)
-        idx = np.nonzero(d > gap_ms)[0]
-        yield _key_frame(key, keys, len(idx),
-                         {"gap_start_ms": t_all[idx],
-                          "gap_end_ms": t_all[idx + 1],
-                          "gap_ms": d[idx]})
-
-    return fn
+def _gaps_kernel(state, t, pdf, *, gap_ms):
+    """One ``np.diff`` over the state-prepended sorted times (integer
+    arithmetic, so exact)."""
+    if state is not None:
+        t = _prepend(state[0], t)
+    d = np.diff(t)
+    idx = np.nonzero(d > gap_ms)[0]
+    return (int(t[-1]),), {"gap_start_ms": t[idx], "gap_end_ms": t[idx + 1],
+                           "gap_ms": d[idx]}
 
 
 def stream_gaps(
@@ -285,91 +299,64 @@ def stream_gaps(
         raise ValueError(f"min_gap needs a fixed window spec, got {min_gap!r}")
     if gap_ms <= 0:
         raise ValueError(f"min_gap must be positive, got {min_gap!r}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("gap_start_ms", T.LongType()),
-           T.StructField("gap_end_ms", T.LongType()),
-           T.StructField("gap_ms", T.LongType())])
-    state_schema = T.StructType([T.StructField("ts", T.LongType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _gaps_state_fn(keys, time_col, gap_ms),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(sdf, partition_by, time_col, None, _longs("ts"),
+                       _longs("gap_start_ms", "gap_end_ms", "gap_ms"),
+                       partial(_gaps_kernel, gap_ms=gap_ms))
 
 
-def _sessions_state_fn(keys: list[str], time_col: str, gap_ms: int,
-                       fields: list[str]):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized (r10): session breaks come from one ``np.diff``
-        (strictly greater than the gap — an event at EXACTLY last+gap
-        still joins, matching Spark's native session_window boundary);
-        Python re-enters once per SEGMENT (closed session + the one
-        left open), not once per event. Per-segment field sums keep
-        the sequential left-fold order by seeding a ``np.cumsum`` with
-        the carried state sum (missing samples add an exact 0.0), so
-        drained output is bit-identical to the former per-row loop."""
-        if state.exists:
-            begin, last, n0 = state.get[0], state.get[1], state.get[2]
-            sums0 = list(state.get[3:])
+def _sessions_kernel(state, t, pdf, *, gap_ms, fields):
+    """Session breaks come from one ``np.diff`` (strictly greater than
+    the gap — an event at EXACTLY last+gap still joins, matching Spark's
+    native session_window boundary); Python re-enters once per SEGMENT
+    (closed session + the one left open), not once per event.
+    Per-segment field sums keep the sequential left-fold order by seeding
+    a ``np.cumsum`` with the carried state sum (missing samples add an
+    exact 0.0), so a session's sum does not depend on where micro-batch
+    boundaries cut it."""
+    if state is not None:
+        begin, last, n0, *sums0 = state
+    else:
+        begin, last, n0, sums0 = None, None, 0, [0.0] * len(fields)
+    nr = len(t)
+    zvals = [np.where(np.isnan(v), 0.0, v)
+             for v in (_f64(pdf, f) for f in fields)]
+    # segment boundaries WITHIN the batch
+    cuts = (np.nonzero(np.diff(t) > gap_ms)[0] + 1)
+    starts = np.r_[0, cuts]
+    ends = np.r_[cuts, nr]
+    outs_b, outs_e, outs_n = [], [], []
+    outs_s = [[] for _ in fields]
+    held_open = last is not None
+    if held_open and t[0] - last > gap_ms:
+        # the held session closes before the batch's first event
+        outs_b.append(begin)
+        outs_e.append(last + gap_ms)
+        outs_n.append(n0)
+        for i in range(len(fields)):
+            outs_s[i].append(sums0[i])
+        held_open = False
+    for si in range(len(starts)):
+        s, e = int(starts[si]), int(ends[si])
+        merged = held_open and si == 0
+        seg_begin = begin if merged else int(t[s])
+        seg_n = (n0 if merged else 0) + (e - s)
+        seg_sums = [float(np.cumsum(np.concatenate(
+            [[sums0[i] if merged else 0.0], z[s:e]]))[-1])
+            for i, z in enumerate(zvals)]
+        if si < len(starts) - 1:
+            outs_b.append(seg_begin)
+            outs_e.append(int(t[e - 1]) + gap_ms)
+            outs_n.append(seg_n)
+            for i, v in enumerate(seg_sums):
+                outs_s[i].append(v)
         else:
-            begin, last, n0 = None, None, 0
-            sums0 = [0.0] * len(fields)
-        pdf = _whole_group(pdfs, time_col)
-        cols = (keys + ["begin_ms", "end_ms", "n"]
-                + [f"{f}_sum" for f in fields])
-        nr = len(pdf)
-        if not nr:
-            return  # yield nothing: no output rows for this group
-        t = _t_ms(pdf, time_col)
-        vals = {f: _f64(pdf, f) for f in fields}
-        zvals = {f: np.where(np.isnan(v), 0.0, v)
-                 for f, v in vals.items()}
-        # segment boundaries WITHIN the batch
-        cuts = (np.nonzero(np.diff(t) > gap_ms)[0] + 1)
-        starts = np.r_[0, cuts]
-        ends = np.r_[cuts, nr]
-        outs_b, outs_e, outs_n = [], [], []
-        outs_s = {f: [] for f in fields}
-        held_open = last is not None
-        if held_open and t[0] - last > gap_ms:
-            # the held session closes before the batch's first event
-            outs_b.append(begin)
-            outs_e.append(last + gap_ms)
-            outs_n.append(n0)
-            for i, f in enumerate(fields):
-                outs_s[f].append(sums0[i])
-            held_open = False
-        for si in range(len(starts)):
-            s, e = int(starts[si]), int(ends[si])
-            merged = held_open and si == 0
-            seg_begin = begin if merged else int(t[s])
-            seg_n = (n0 if merged else 0) + (e - s)
-            seg_sums = []
-            for i, f in enumerate(fields):
-                seed = sums0[i] if merged else 0.0
-                seg_sums.append(float(np.cumsum(
-                    np.concatenate([[seed], zvals[f][s:e]]))[-1]))
-            if si < len(starts) - 1:
-                outs_b.append(seg_begin)
-                outs_e.append(int(t[e - 1]) + gap_ms)
-                outs_n.append(seg_n)
-                for f, v in zip(fields, seg_sums):
-                    outs_s[f].append(v)
-            else:
-                state.update((seg_begin, int(t[-1]), seg_n, *seg_sums))
-        out_cols = {"begin_ms": np.array(outs_b, dtype=np.int64),
-                    "end_ms": np.array(outs_e, dtype=np.int64),
-                    "n": np.array(outs_n, dtype=np.int64)}
-        for f in fields:
-            out_cols[f"{f}_sum"] = np.array(outs_s[f], dtype=np.float64)
-        yield _key_frame(key, keys, len(outs_b), out_cols)
-
-    return fn
+            new = (seg_begin, int(t[-1]), seg_n, *seg_sums)
+    out = {"begin_ms": np.array(outs_b, dtype=np.int64),
+           "end_ms": np.array(outs_e, dtype=np.int64),
+           "n": np.array(outs_n, dtype=np.int64)}
+    for f, s in zip(fields, outs_s):
+        out[f"{f}_sum"] = np.array(s, dtype=np.float64)
+    return new, out
 
 
 def stream_sessions(
@@ -407,59 +394,33 @@ def stream_sessions(
         raise ValueError(f"window must be positive, got {window!r}")
     fields = ([field_spec] if isinstance(field_spec, str)
               else list(field_spec))
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("begin_ms", T.LongType()),
-           T.StructField("end_ms", T.LongType()),
-           T.StructField("n", T.LongType())]
-        + [T.StructField(f"{f}_sum", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField("begin", T.LongType()),
-         T.StructField("last", T.LongType()),
-         T.StructField("n", T.LongType())]
-        + [T.StructField(f"s{i}", T.DoubleType())
-           for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _sessions_state_fn(keys, time_col, gap_ms, fields),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, None,
+        _longs("begin", "last", "n")
+        + _doubles(*(f"s{i}" for i in range(len(fields)))),
+        _longs("begin_ms", "end_ms", "n")
+        + _doubles(*(f"{f}_sum" for f in fields)),
+        partial(_sessions_kernel, gap_ms=gap_ms, fields=fields))
 
 
-def _throttle_state_fn(keys: list[str], time_col: str, gap_ms: int,
-                       tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized: the greedy keep-chain only re-enters Python once
-        per KEPT event (``searchsorted`` jumps to the next time >=
-        last + gap), not once per event — O(kept * log n) instead of
-        O(n) Python rows, identical keep set by construction (the
-        sequential rule "keep iff cur - last >= gap" admits exactly
-        this next-fit chain on sorted times; equal-ts peers after the
-        first kept are skipped by searchsorted side='left')."""
-        last = state.get[0] if state.exists else None
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = keys + ["t_ms", "throttle_keep"]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
-        t = _t_ms(pdf, time_col)
-        n = len(t)
-        keep = np.zeros(n, dtype=bool)
-        i = 0 if last is None else int(np.searchsorted(t, last + gap_ms,
-                                                       side="left"))
-        while i < n:
-            keep[i] = True
-            last = int(t[i])
-            i = int(np.searchsorted(t, last + gap_ms, side="left"))
-        if last is not None:
-            state.update((last,))
-        yield _key_frame(key, keys, n, {"t_ms": t, "throttle_keep": keep})
-
-    return fn
+def _throttle_kernel(state, t, pdf, *, gap_ms):
+    """The greedy keep-chain re-enters Python once per KEPT event
+    (``searchsorted`` jumps to the next time >= last + gap), not once
+    per event — identical keep set by construction (the sequential rule
+    "keep iff cur - last >= gap" admits exactly this next-fit chain on
+    sorted times; equal-ts peers after the first kept are skipped by
+    searchsorted side='left')."""
+    last = state[0] if state is not None else None
+    n = len(t)
+    keep = np.zeros(n, dtype=bool)
+    i = 0 if last is None else int(np.searchsorted(t, last + gap_ms,
+                                                   side="left"))
+    while i < n:
+        keep[i] = True
+        last = int(t[i])
+        i = int(np.searchsorted(t, last + gap_ms, side="left"))
+    return (None if last is None else (last,)), {"t_ms": t,
+                                                 "throttle_keep": keep}
 
 
 def stream_throttle(
@@ -480,56 +441,32 @@ def stream_throttle(
     if gap_ms is None or gap_ms <= 0:
         raise ValueError(f"min_spacing must be a positive fixed window, "
                          f"got {min_spacing!r}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("t_ms", T.LongType()),
-           T.StructField("throttle_keep", T.BooleanType())])
-    state_schema = T.StructType([T.StructField("last", T.LongType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _throttle_state_fn(keys, time_col, gap_ms, tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak, _longs("last"),
+        _longs("t_ms") + [T.StructField("throttle_keep", T.BooleanType())],
+        partial(_throttle_kernel, gap_ms=gap_ms))
 
 
-def _transitions_state_fn(keys: list[str], time_col: str, type_col: str,
-                          tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized: (prev, cur) pairs via a shifted object array with
-        the cross-batch state prepended. A NULL type value is a REAL
-        observation: it participates as both `to_type` and the next
-        row's `from_type` (the batch lead()-pairs semantics), so the
-        only row without an edge is each key's very first event — state
-        carries an explicit `seen` flag to tell "no predecessor yet"
-        apart from "predecessor was null" (the r10 review found the
-        per-row version silently bridging over null events across
-        micro-batch boundaries, fabricating never-adjacent edges)."""
-        seen = state.exists and bool(state.get[1])
-        prev = state.get[0] if state.exists else None
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
-        t = _t_ms(pdf, time_col)
-        cur = pdf[type_col].to_numpy(dtype=object)
-        cur = np.array([None if (x is None or (isinstance(x, float)
-                                               and np.isnan(x))) else x
-                        for x in cur], dtype=object)
-        prevs = np.empty(len(cur), dtype=object)
-        prevs[1:] = cur[:-1]
-        prevs[0] = prev
-        state.update((cur[-1], True))
-        if not seen:                 # first event ever has no edge
-            t, prevs, cur = t[1:], prevs[1:], cur[1:]
-        yield _key_frame(key, keys, len(t),
-                         {"t_ms": t, "from_type": prevs,
-                          "to_type": cur})
-
-    return fn
+def _transitions_kernel(state, t, pdf, *, type_col):
+    """(prev, cur) pairs via a shifted object array with the cross-batch
+    state prepended. A NULL type value is a REAL observation: it
+    participates as both `to_type` and the next row's `from_type` (the
+    batch lead()-pairs semantics), so the only row without an edge is
+    each key's very first event — state carries an explicit `seen` flag
+    to tell "no predecessor yet" apart from "predecessor was null", so a
+    null event is never bridged over across a micro-batch boundary (that
+    would fabricate never-adjacent edges)."""
+    cur = np.array([None if (x is None or (isinstance(x, float)
+                                           and np.isnan(x))) else x
+                    for x in pdf[type_col].to_numpy(dtype=object)],
+                   dtype=object)
+    prevs = np.empty(len(cur), dtype=object)
+    prevs[1:] = cur[:-1]
+    prevs[0] = state[0] if state is not None else None
+    new = (cur[-1], True)
+    if state is None or not state[1]:   # first event ever has no edge
+        t, prevs, cur = t[1:], prevs[1:], cur[1:]
+    return new, {"t_ms": t, "from_type": prevs, "to_type": cur}
 
 
 def stream_transitions(
@@ -548,90 +485,57 @@ def stream_transitions(
     than bridged over (filter ``from_type/to_type IS NOT NULL``
     downstream for the oracle's lead()-pairs view).
     """
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
     t = sdf.schema[type_col].dataType
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("t_ms", T.LongType()),
-           T.StructField("from_type", t), T.StructField("to_type", t)])
-    state_schema = T.StructType([T.StructField("prev", t),
-                                 T.StructField("seen", T.BooleanType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _transitions_state_fn(keys, time_col, type_col, tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak,
+        [T.StructField("prev", t), T.StructField("seen", T.BooleanType())],
+        _longs("t_ms") + [T.StructField("from_type", t),
+                          T.StructField("to_type", t)],
+        partial(_transitions_kernel, type_col=type_col))
 
 
-def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
-                  tiebreak: str | None, carry: list[str]):
+def _cum_kernel(state, t, pdf, *, rows_spec, carry):
+    """Every cumulative reducer is a prefix scan — state-seeded
+    ``np.cumsum`` for sum/count (sequential left-to-right, bit-identical
+    to a per-row ``+=``), ``np.minimum/maximum.accumulate`` with ±inf for
+    invalid samples — so the whole batch is a handful of C scans, zero
+    per-row Python.  State per input column: (sum, count, min, max) over
+    VALID values."""
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized (r10): every cumulative reducer is a prefix scan
-        — state-seeded ``np.cumsum`` for sum/count (sequential
-        left-to-right, bit-identical to the former per-row ``+=``),
-        ``np.minimum/maximum.accumulate`` with ±inf for invalid samples
-        — so the whole batch is a handful of C scans, zero per-row
-        Python."""
-        # state per input column: (sum, count, min, max) over VALID values
-        if state.exists:
-            st = list(state.get)
-            acc = {c: list(st[4 * i:4 * i + 4])
-                   for i, c in enumerate(in_cols)}
-        else:
-            acc = {c: [0.0, 0, None, None] for c in in_cols}
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = (keys + ["t_ms"] + list(carry) + [r[0] for r in rows_spec])
-        nr = len(pdf)
-        if not nr:
-            state.update(tuple(x for c in in_cols for x in acc[c]))
-            return  # yield nothing: no output rows for this group
-        scans: dict = {}
-        for c in in_cols:
-            v = _f64(pdf, c)
-            ok = ~np.isnan(v)
-            s0, n0, mn0, mx0 = acc[c]
-            cs = np.cumsum(np.concatenate(
-                [[s0], np.where(ok, v, 0.0)]))[1:]
-            cn = n0 + np.cumsum(ok.astype(np.int64))
-            cmn = np.minimum.accumulate(np.concatenate(
-                [[np.inf if mn0 is None else mn0],
-                 np.where(ok, v, np.inf)]))[1:]
-            cmx = np.maximum.accumulate(np.concatenate(
-                [[-np.inf if mx0 is None else mx0],
-                 np.where(ok, v, -np.inf)]))[1:]
-            scans[c] = (cs, cn, cmn, cmx)
-            acc[c] = [float(cs[-1]), int(cn[-1]),
-                      None if cn[-1] == 0 else float(cmn[-1]),
-                      None if cn[-1] == 0 else float(cmx[-1])]
-        out_cols = {"t_ms": _t_ms(pdf, time_col)}
-        for c in carry:
-            out_cols[c] = pdf[c].to_numpy(dtype=object)
-        for out, in_col, func, _flt in rows_spec:
-            cs, cn, cmn, cmx = scans[in_col]
-            if func == "count":
-                out_cols[out] = cn
-                continue
-            empty = cn == 0
-            if func == "sum":
-                vals = cs
-            elif func in ("avg", "mean"):
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    vals = cs / cn
-            elif func == "min":
-                vals = cmn
-            else:  # max
-                vals = cmx
-            out_cols[out] = np.where(empty, np.nan, vals)
-        state.update(tuple(x for c in in_cols for x in acc[c]))
-        yield _key_frame(key, keys, nr, out_cols)
-
-    return fn
+    new, scans = [], {}
+    for i, c in enumerate(in_cols):
+        s0, n0, mn0, mx0 = (state[4 * i:4 * i + 4] if state is not None
+                            else (0.0, 0, None, None))
+        v = _f64(pdf, c)
+        ok = ~np.isnan(v)
+        cs = np.cumsum(np.concatenate([[s0], np.where(ok, v, 0.0)]))[1:]
+        cn = n0 + np.cumsum(ok.astype(np.int64))
+        cmn = np.minimum.accumulate(np.concatenate(
+            [[np.inf if mn0 is None else mn0], np.where(ok, v, np.inf)]))[1:]
+        cmx = np.maximum.accumulate(np.concatenate(
+            [[-np.inf if mx0 is None else mx0],
+             np.where(ok, v, -np.inf)]))[1:]
+        scans[c] = (cs, cn, cmn, cmx)
+        new += [float(cs[-1]), int(cn[-1]),
+                None if cn[-1] == 0 else float(cmn[-1]),
+                None if cn[-1] == 0 else float(cmx[-1])]
+    out = {"t_ms": t, **_carry(pdf, carry)}
+    for name, in_col, func, _flt in rows_spec:
+        cs, cn, cmn, cmx = scans[in_col]
+        if func == "count":
+            out[name] = cn
+            continue
+        if func == "sum":
+            vals = cs
+        elif func in ("avg", "mean"):
+            with np.errstate(invalid="ignore", divide="ignore"):
+                vals = cs / cn
+        elif func == "min":
+            vals = cmn
+        else:  # max
+            vals = cmx
+        out[name] = np.where(cn == 0, np.nan, vals)
+    return tuple(new), out
 
 
 _CUM_FUNCS = {"sum", "count", "min", "max", "avg", "mean"}
@@ -667,108 +571,56 @@ def stream_cumulative(
                 f"stream_cumulative supports ignore_missing only, got "
                 f"{flt!r} for {out!r}")
         rows_spec.append((out, in_col, func, flt))
-    carry = list(carry_cols)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry]
-        + [T.StructField(r[0], T.LongType() if r[2] == "count"
-                         else T.DoubleType()) for r in rows_spec])
     state_fields = []
-    for i, c in enumerate(in_cols):
-        state_fields += [
-            T.StructField(f"s{i}", T.DoubleType()),
-            T.StructField(f"c{i}", T.LongType()),
-            T.StructField(f"mn{i}", T.DoubleType()),
-            T.StructField(f"mx{i}", T.DoubleType())]
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _cum_state_fn(rows_spec, keys, time_col, tiebreak, carry),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    for i in range(len(dict.fromkeys(r[1] for r in rows_spec))):
+        state_fields += (_doubles(f"s{i}") + _longs(f"c{i}")
+                         + _doubles(f"mn{i}", f"mx{i}"))
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak, state_fields,
+        _longs("t_ms") + [sdf.schema[c] for c in carry_cols]
+        + [T.StructField(r[0], T.LongType() if r[2] == "count"
+                         else T.DoubleType()) for r in rows_spec],
+        partial(_cum_kernel, rows_spec=rows_spec, carry=list(carry_cols)))
 
 
-def _align_state_fn(fields: list[str], keys: list[str], time_col: str,
-                    dur_ms: int, method: str, limit: int | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized (r11): boundary synthesis per consecutive pair via
-        np.repeat over per-gap boundary counts; the interpolation
-        ``pv + (cv - pv) * (b - prev) / (cur - prev)`` runs elementwise
-        in float64 with int64 time deltas promoted exactly, so every
-        emitted value is IEEE-identical to the former per-row loop."""
-        if state.exists:
-            prev_ms, prev_vals = state.get[0], list(state.get[1:])
-        else:
-            prev_ms, prev_vals = None, [None] * len(fields)
-        pdf = _whole_group(pdfs, time_col)
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
-        t_new = _t_ms(pdf, time_col)
-        vals = {f: _f64(pdf, f) for f in fields}
-        head = None
-        if prev_ms is None:
-            if int(t_new[0]) % dur_ms == 0:   # first event, already aligned
-                head = (int(t_new[0]),
-                        {f: vals[f][0] for f in fields})
-            t_all, v_all = t_new, vals
-        else:
-            t_all = np.concatenate(
-                [np.array([prev_ms], dtype=np.int64), t_new])
-            v_all = {f: np.concatenate(
-                [np.array([np.nan if prev_vals[i] is None
-                           else prev_vals[i]]), vals[f]])
-                for i, f in enumerate(fields)}
-        state.update((int(t_all[-1]),
-                      *(None if np.isnan(v_all[f][-1])
-                        else float(v_all[f][-1]) for f in fields)))
-        pos = t_all // dur_ms
-        nb = pos[1:] - pos[:-1] if len(t_all) > 1 \
-            else np.zeros(0, dtype=np.int64)
-        total = int(nb.sum())
-        n_head = 1 if head is not None else 0
-        if total + n_head == 0:
-            return  # yield nothing: no output rows for this group
-        out_cols: dict[str, np.ndarray] = {}
-        if total:
-            gi = np.repeat(np.arange(len(nb)), nb)
-            base = np.repeat(np.cumsum(nb) - nb, nb)
-            off = np.arange(total) - base
-            b_ms = (pos[:-1][gi] + off + 1) * dur_ms
-            over = np.zeros(len(nb), dtype=bool) if limit is None \
-                else nb > limit
-            o = over[gi]
-            pms, cms = t_all[:-1][gi], t_all[1:][gi]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                for f in fields:
-                    pv, cv = v_all[f][:-1][gi], v_all[f][1:][gi]
-                    if method == "linear":
-                        res = pv + (cv - pv) * (b_ms - pms) / (cms - pms)
-                        bad = o | np.isnan(pv) | np.isnan(cv)
-                    else:
-                        res = pv
-                        bad = o | np.isnan(pv)
-                    out_cols[f] = np.where(bad, np.nan, res)
-            t_out = b_ms
-        else:
-            t_out = np.zeros(0, dtype=np.int64)
-            for f in fields:
-                out_cols[f] = np.zeros(0)
-        if head is not None:
-            t_out = np.concatenate(
-                [np.array([head[0]], dtype=np.int64), t_out])
-            for f in fields:
-                out_cols[f] = np.concatenate(
-                    [np.array([head[1][f]]), out_cols[f]])
-        yield _key_frame(key, keys, len(t_out),
-                         {"t_ms": t_out, **{f: out_cols[f]
-                                            for f in fields}})
-
-    return fn
+def _align_kernel(state, t, pdf, *, fields, dur_ms, method, limit):
+    """Boundary synthesis per consecutive pair via np.repeat over
+    per-gap boundary counts; the interpolation ``pv + (cv - pv) * (b -
+    prev) / (cur - prev)`` runs elementwise in float64 with int64 time
+    deltas promoted exactly, so every emitted value is IEEE-identical to
+    the scalar formula."""
+    vals = [_f64(pdf, f) for f in fields]
+    # a series' very first event is emitted itself when already aligned
+    head = state is None and int(t[0]) % dur_ms == 0
+    t_head, v_head = t[:1], [v[:1] for v in vals]
+    t, vals = _with_prev(state, t, vals)
+    pos = t // dur_ms
+    nb = np.diff(pos)
+    total = int(nb.sum())
+    if not total:
+        nb = nb[:0]    # no boundary crossed (or late data netting to none)
+    gi = np.repeat(np.arange(len(nb)), nb)
+    base = np.repeat(np.cumsum(nb) - nb, nb)
+    b_ms = (pos[:-1][gi] + (np.arange(total) - base) + 1) * dur_ms
+    o = (np.zeros(len(nb), dtype=bool) if limit is None
+         else nb > limit)[gi]
+    pms, cms = t[:-1][gi], t[1:][gi]
+    out = {"t_ms": b_ms}
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for f, v in zip(fields, vals):
+            pv, cv = v[:-1][gi], v[1:][gi]
+            if method == "linear":
+                res = pv + (cv - pv) * (b_ms - pms) / (cms - pms)
+                bad = o | np.isnan(pv) | np.isnan(cv)
+            else:
+                res = pv
+                bad = o | np.isnan(pv)
+            out[f] = np.where(bad, np.nan, res)
+    if head:
+        out["t_ms"] = np.concatenate([t_head, b_ms])
+        for f, v in zip(fields, v_head):
+            out[f] = np.concatenate([v, out[f]])
+    return _last_row(t, vals), out
 
 
 def stream_align(
@@ -792,25 +644,15 @@ def stream_align(
     if dur is None:
         raise ValueError(f"align needs a fixed window spec, got {window!r}")
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [T.StructField(f, T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField("ts", T.LongType())]
-        + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _align_state_fn(fields, keys, time_col, dur, method, limit),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, None,
+        _longs("ts") + _doubles(*(f"v{i}" for i in range(len(fields)))),
+        _longs("t_ms") + _doubles(*fields),
+        partial(_align_kernel, fields=fields, dur_ms=dur, method=method,
+                limit=limit))
 
 
-def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
-                   method: str, fill_limit: int | None):
+def _fill_kernel(state, t, pdf, *, fields, method, fill_limit):
     """Streaming fill state machine (reference filler.py semantics):
 
     - pad: LOCF with a per-column consecutive-fill counter (reset on valid;
@@ -821,142 +663,126 @@ def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
       ``fill_limit`` is emitted unfilled and the anchor resets
       (``filler.py:197-276``). Output order across a closed run follows
       event time (rows are emitted when their run closes, append-mode).
+
+    State: (last valid value, consecutive fills, ts of last valid value)
+    per column, then the linear cache of pending ms as JSON.
     """
+    n = len(fields)
+    if state is not None:
+        last = list(state[0:n])
+        counts = list(state[n:2 * n])
+        last_ms = list(state[2 * n:3 * n])
+        cache = json.loads(state[3 * n]) if method == "linear" else \
+            [[] for _ in range(n)]
+    else:
+        last = [None] * n          # last valid value per column
+        counts = [0] * n           # consecutive fills per column
+        last_ms = [None] * n       # ts of last valid value (linear)
+        cache = [[] for _ in range(n)]  # pending ms per column
+    v_arrs = [_f64(pdf, f) for f in fields]
+    if method in ("pad", "zero") and len(np.unique(t)) == len(t):
+        # vectorized LOCF: last-valid index via np.maximum.accumulate;
+        # the consecutive-fill counter has the closed form cnt_j = j -
+        # last_valid_idx_j, with the carried counter extending a leading
+        # invalid run as a virtual valid at index -(1 + carried).  Pure
+        # copies and integer compares — no float arithmetic — so output
+        # is trivially identical to the loop.  Duplicate timestamps fall
+        # through to the sequential slot()-merging path (the per-ms
+        # overwrite semantics).
+        m = len(t)
+        idx = np.arange(m, dtype=np.int64)
+        out = {"t_ms": t}
+        for i in range(n):
+            x = v_arrs[i]
+            valid = ~np.isnan(x)
+            lv = np.where(valid, idx, np.int64(-1))
+            np.maximum.accumulate(lv, out=lv)
+            has_carry = last[i] is not None
+            lastval = np.where(
+                lv >= 0, x[np.clip(lv, 0, None)],
+                last[i] if has_carry else np.nan)
+            cnt = np.where(lv >= 0, idx - lv,
+                           idx + 1 + int(counts[i] or 0))
+            fillable = np.ones(m, dtype=bool) if fill_limit is None \
+                else cnt <= fill_limit
+            if method == "zero":
+                fill = np.zeros(m)
+                can = fillable
+            else:
+                fill = lastval
+                can = fillable & ~np.isnan(lastval)
+            out[fields[i]] = np.where(valid, x, np.where(can, fill, np.nan))
+            # end-of-batch state (the loop's exact carry rules)
+            if valid[-1]:
+                counts[i] = 0
+            elif method == "pad" and np.isnan(lastval[-1]):
+                pass                      # uncounted leading gap
+            else:
+                c_end = int(cnt[-1])
+                counts[i] = c_end if fill_limit is None \
+                    else min(c_end, int(fill_limit))
+            last[i] = None if np.isnan(lastval[-1]) \
+                else float(lastval[-1])
+        return tuple(last) + tuple(counts) + tuple(last_ms) + ("",), out
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        n = len(fields)
-        if state.exists:
-            snap = state.get
-            last = list(snap[0:n])
-            counts = list(snap[n:2 * n])
-            last_ms = list(snap[2 * n:3 * n])
-            import json as _json
-            cache = _json.loads(snap[3 * n]) if method == "linear" else \
-                [[] for _ in range(n)]
-        else:
-            last = [None] * n          # last valid value per column
-            counts = [0] * n           # consecutive fills per column
-            last_ms = [None] * n       # ts of last valid value (linear)
-            cache = [[] for _ in range(n)]  # pending (ms, row_id) per column
+    rows: dict[int, list] = {}     # ms -> output values per column
 
-        rows: dict[int, list] = {}     # ms -> output values per column
+    def slot(ms):
+        return rows.setdefault(ms, [None] * n)
 
-        def slot(ms):
-            return rows.setdefault(ms, [None] * n)
-
-        pdf = _whole_group(pdfs, time_col)
-        if not len(pdf):
-            return  # yield nothing: no rows, state unchanged
-        t_arr = _t_ms(pdf, time_col)
-        v_arrs = [_f64(pdf, f) for f in fields]
-        if method in ("pad", "zero") and \
-                len(np.unique(t_arr)) == len(t_arr):
-            # vectorized LOCF (r11): last-valid index via
-            # np.maximum.accumulate; the consecutive-fill counter has
-            # the closed form cnt_j = j - last_valid_idx_j, with the
-            # carried counter extending a leading invalid run as a
-            # virtual valid at index -(1 + carried).  Pure copies and
-            # integer compares — no float arithmetic — so output is
-            # trivially identical to the loop.  Duplicate timestamps
-            # fall through to the sequential slot()-merging path (the
-            # legacy per-ms overwrite semantics).
-            m = len(t_arr)
-            idx = np.arange(m, dtype=np.int64)
-            out_cols = {}
-            for i in range(n):
-                x = v_arrs[i]
-                valid = ~np.isnan(x)
-                lv = np.where(valid, idx, np.int64(-1))
-                np.maximum.accumulate(lv, out=lv)
-                has_carry = last[i] is not None
-                lastval = np.where(
-                    lv >= 0, x[np.clip(lv, 0, None)],
-                    last[i] if has_carry else np.nan)
-                cnt = np.where(lv >= 0, idx - lv,
-                               idx + 1 + int(counts[i] or 0))
-                fillable = np.ones(m, dtype=bool) if fill_limit is None \
-                    else cnt <= fill_limit
-                if method == "zero":
-                    fill = np.zeros(m)
-                    can = fillable
-                else:
-                    fill = lastval
-                    can = fillable & ~np.isnan(lastval)
-                out_cols[fields[i]] = np.where(
-                    valid, x, np.where(can, fill, np.nan))
-                # end-of-batch state (the loop's exact carry rules)
-                if valid[-1]:
+    for j in range(len(t)):
+        ms = int(t[j])
+        out = slot(ms)
+        for i in range(n):
+            v = v_arrs[i][j]
+            valid = not np.isnan(v)
+            if method in ("pad", "zero"):
+                if valid:
+                    v = float(v)
+                    last[i] = v
                     counts[i] = 0
-                elif method == "pad" and np.isnan(lastval[-1]):
-                    pass                      # uncounted leading gap
+                    out[i] = v
+                elif fill_limit is not None and counts[i] >= fill_limit:
+                    out[i] = None
+                elif method == "zero":
+                    counts[i] += 1
+                    out[i] = 0.0
+                elif last[i] is not None:
+                    counts[i] += 1
+                    out[i] = last[i]
                 else:
-                    c_end = int(cnt[-1])
-                    counts[i] = c_end if fill_limit is None \
-                        else min(c_end, int(fill_limit))
-                last[i] = None if np.isnan(lastval[-1]) \
-                    else float(lastval[-1])
-            state.update(tuple(last) + tuple(counts) + tuple(last_ms)
-                         + ("",))
-            yield _key_frame(key, keys, m, {"t_ms": t_arr, **out_cols})
-            return
-        for j in range(len(t_arr)):
-            ms = int(t_arr[j])
-            out = slot(ms)
-            for i in range(n):
-                v = v_arrs[i][j]
-                valid = not np.isnan(v)
-                if method in ("pad", "zero"):
-                    if valid:
-                        v = float(v)
-                        last[i] = v
-                        counts[i] = 0
-                        out[i] = v
-                    elif fill_limit is not None and \
-                            counts[i] >= fill_limit:
-                        out[i] = None
-                    elif method == "zero":
-                        counts[i] += 1
-                        out[i] = 0.0
-                    elif last[i] is not None:
-                        counts[i] += 1
-                        out[i] = last[i]
-                    else:
-                        out[i] = None
-                else:  # linear (single column; rows held until closure)
-                    if valid:
-                        v = float(v)
+                    out[i] = None
+            else:  # linear (single column; rows held until closure)
+                if valid:
+                    v = float(v)
+                    for c_ms in cache[i]:
+                        # close the pending run: emit interpolated
+                        frac = (c_ms - last_ms[i]) / (ms - last_ms[i])
+                        slot(c_ms)[i] = last[i] + (v - last[i]) * frac
+                    cache[i] = []
+                    last[i], last_ms[i] = v, ms
+                    out[i] = v
+                elif last[i] is None:
+                    out[i] = None  # leading gap: emit as-is
+                else:
+                    # hold the row until a valid value closes the run
+                    rows.pop(ms, None)
+                    cache[i].append(ms)
+                    if fill_limit is not None and \
+                            len(cache[i]) >= fill_limit:
+                        # run hit the limit: emit unfilled, reset
+                        # anchor (filler.py:240-258)
                         for c_ms in cache[i]:
-                            # close the pending run: emit interpolated
-                            frac = (c_ms - last_ms[i]) / (ms - last_ms[i])
-                            slot(c_ms)[i] = last[i] + (v - last[i]) * frac
+                            slot(c_ms)[i] = None
                         cache[i] = []
-                        last[i], last_ms[i] = v, ms
-                        out[i] = v
-                    elif last[i] is None:
-                        out[i] = None  # leading gap: emit as-is
-                    else:
-                        # hold the row until a valid value closes the run
-                        rows.pop(ms, None)
-                        cache[i].append(ms)
-                        if fill_limit is not None and \
-                                len(cache[i]) >= fill_limit:
-                            # run hit the limit: emit unfilled, reset
-                            # anchor (filler.py:240-258)
-                            for c_ms in cache[i]:
-                                slot(c_ms)[i] = None
-                            cache[i] = []
-                            last[i], last_ms[i] = None, None
-        if method == "linear":
-            import json as _json
-            state.update(tuple(last) + tuple(counts) + tuple(last_ms)
-                         + (_json.dumps(cache),))
-        else:
-            state.update(tuple(last) + tuple(counts) + tuple(last_ms)
-                         + ("",))
-        outs = [list(key) + [ms] + vals for ms, vals in sorted(rows.items())]
-        yield pd.DataFrame(outs, columns=keys + ["t_ms"] + fields)
-
-    return fn
+                        last[i], last_ms[i] = None, None
+    new = (tuple(last) + tuple(counts) + tuple(last_ms)
+           + (json.dumps(cache) if method == "linear" else "",))
+    ms_out = sorted(rows)
+    out = {"t_ms": np.array(ms_out, dtype=np.int64)}
+    for i, f in enumerate(fields):
+        out[f] = np.array([rows[ms][i] for ms in ms_out], dtype=np.float64)
+    return new, out
 
 
 def stream_fill(
@@ -983,24 +809,15 @@ def stream_fill(
     if method == "linear" and len(fields) != 1:
         raise ValueError("streaming linear fill takes a single column "
                          "(reference filler.py:107-110)")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [T.StructField(f, T.DoubleType()) for f in fields])
-    n = len(fields)
-    state_schema = T.StructType(
-        [T.StructField(f"v{i}", T.DoubleType()) for i in range(n)]
-        + [T.StructField(f"c{i}", T.LongType()) for i in range(n)]
-        + [T.StructField(f"t{i}", T.LongType()) for i in range(n)]
-        + [T.StructField("cache", T.StringType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _fill_state_fn(fields, keys, time_col, method, fill_limit),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    n = range(len(fields))
+    return _keyed_scan(
+        sdf, partition_by, time_col, None,
+        _doubles(*(f"v{i}" for i in n)) + _longs(*(f"c{i}" for i in n))
+        + _longs(*(f"t{i}" for i in n))
+        + [T.StructField("cache", T.StringType())],
+        _longs("t_ms") + _doubles(*fields),
+        partial(_fill_kernel, fields=fields, method=method,
+                fill_limit=fill_limit))
 
 
 def stream_fill_pad(
@@ -1013,42 +830,22 @@ def stream_fill_pad(
     return stream_fill(sdf, field_spec, "pad", None, partition_by, time_col)
 
 
-def _ewma_state_fn(fields: list[str], keys: list[str], time_col: str,
-                   alpha: float, tiebreak: str | None = None,
-                   carry: Sequence[str] = ()):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        # array-based loop (r11): the EWMA recurrence rounds at every
-        # step, so any reassociated closed form (the ewma_scan affine
-        # compose) drifts in the last ulp and would break the
-        # bit-for-bit drained==batch parity contract; the per-event
-        # cost that mattered was iterrows row materialization, not the
-        # two flops — plain indexing over numpy arrays removes it while
-        # keeping the scalar float ops identical
-        accs = list(state.get) if state.exists else [None] * len(fields)
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        if not len(pdf):
-            return  # yield nothing: no rows, state unchanged
-        t_arr = _t_ms(pdf, time_col)
-        v_arrs = [_f64(pdf, f) for f in fields]
-        c_arrs = [pdf[c].to_list() for c in carry]
-        outs = []
-        for r in range(len(t_arr)):
-            rec = (list(key) + [int(t_arr[r])]
-                   + [c[r] for c in c_arrs])
-            for j in range(len(fields)):
-                v = v_arrs[j][r]
-                if not np.isnan(v):
-                    accs[j] = float(v) if accs[j] is None \
-                        else alpha * float(v) + (1.0 - alpha) * accs[j]
-                rec.append(accs[j])
-            outs.append(rec)
-        state.update(tuple(accs))
-        cols = (keys + ["t_ms"] + list(carry)
-                + [f"{f}_ewma" for f in fields])
-        yield pd.DataFrame(outs, columns=cols)
-
-    return fn
+def _ewma_kernel(state, t, pdf, *, fields, alpha, carry):
+    """The EWMA recurrence rounds at every step, so any reassociated
+    closed form (the ewma_scan affine compose) drifts in the last ulp and
+    would break the bit-for-bit drained==batch parity contract: the fold
+    stays a scalar loop over numpy arrays, one accumulator per field."""
+    accs = list(state) if state is not None else [None] * len(fields)
+    out = {"t_ms": t, **_carry(pdf, carry)}
+    for j, f in enumerate(fields):
+        acc, col = accs[j], np.empty(len(t))
+        for r, v in enumerate(_f64(pdf, f)):
+            if not np.isnan(v):
+                acc = float(v) if acc is None \
+                    else alpha * float(v) + (1.0 - alpha) * acc
+            col[r] = np.nan if acc is None else acc
+        accs[j], out[f"{f}_ewma"] = acc, col
+    return tuple(accs), out
 
 
 def stream_ewma(
@@ -1070,162 +867,39 @@ def stream_ewma(
     as the batch operator) pins their fold order on both sides.
     """
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _ewma_state_fn(fields, keys, time_col, alpha, tiebreak,
-                       list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak,
+        _doubles(*(f"s{i}" for i in range(len(fields)))),
+        _longs("t_ms") + [sdf.schema[c] for c in carry_cols]
+        + _doubles(*(f"{f}_ewma" for f in fields)),
+        partial(_ewma_kernel, fields=fields, alpha=alpha,
+                carry=list(carry_cols)))
 
 
-def stream_ewma_tws(
-    sdf: DataFrame,
-    field_spec: str | Sequence[str] = "value",
-    alpha: float = 0.5,
-    partition_by: Sequence[str] = (),
-    time_col: str = "time",
-    tiebreak: str | None = None,
-    carry_cols: Sequence[str] = (),
-) -> DataFrame:
-    """`stream_ewma` on the ``transformWithStateInPandas`` API — a
-    migration spike (r6 verdict item 8), NOT the default path.
-
-    Spark 4 keeps ``applyInPandasWithState`` working but the newer
-    StatefulProcessor API is where composite/TTL state and timers land,
-    so the engine should not be wedded to the older call.  This twin
-    produces bit-identical output to :func:`stream_ewma` (same
-    ``_whole_group`` ordering, same accumulator fold, proven by
-    ``tests/test_streaming.py::test_stream_ewma_tws_spike``).
-
-    Migration cost observed (documented in SCALE.md):
-
-    - TWS requires the RocksDB state store provider
-      (``spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider``);
-      the default HDFS-backed store is rejected at query start.  The
-      drain helper below sets it for the query's session.
-    - State formats are NOT checkpoint-compatible: an
-      ``applyInPandasWithState`` checkpoint cannot be resumed by the TWS
-      operator — migrating a live pipeline means a fresh checkpoint (or
-      the state data source reader to bulk-export/import state).
-    - The per-group handler sees the same whole-group Arrow-chunk
-      iterator, so the operator body ports nearly verbatim; only state
-      access changes (``handle.getValueState`` / ``.get()`` tuple vs
-      ``GroupState.get``).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))])
-    carry = list(carry_cols)
-    tb = (tiebreak,) if tiebreak else ()
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState("acc", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            got = self._acc.get() if self._acc.exists() else None
-            accs = list(got) if got is not None else [None] * len(fields)
-            pdf = _whole_group(rows, time_col, tb)
-            if not len(pdf):
-                return
-            # array-based loop (r12): same numpy recipe as the
-            # applyInPandasWithState sibling _ewma_state_fn — the
-            # recurrence rounds at every step so the fold stays scalar,
-            # but iterrows row materialization (the actual cost) goes
-            t_arr = _t_ms(pdf, time_col)
-            v_arrs = [_f64(pdf, f) for f in fields]
-            c_arrs = [pdf[c].to_list() for c in carry]
-            outs = []
-            for r in range(len(t_arr)):
-                rec = (list(key) + [int(t_arr[r])]
-                       + [c[r] for c in c_arrs])
-                for j in range(len(fields)):
-                    v = v_arrs[j][r]
-                    if not np.isnan(v):
-                        accs[j] = float(v) if accs[j] is None \
-                            else alpha * float(v) + (1.0 - alpha) * accs[j]
-                    rec.append(accs[j])
-                outs.append(rec)
-            self._acc.update(tuple(accs))
-            cols = (keys + ["t_ms"] + carry + [f"{f}_ewma" for f in fields])
-            yield pd.DataFrame(outs, columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    out = sdf.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=_EwmaProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none")
-    return out.drop("__k") if dummy else out
+def _nan_if_none(x):
+    return math.nan if x is None else x
 
 
-def _holt_state_fn(field: str, keys: list[str], time_col: str,
-                   alpha: float, beta: float,
-                   tiebreak: str | None = None,
-                   carry: Sequence[str] = ()):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import math
-
-        # NaN sentinel for "no valid sample yet", matching the batch
-        # operator's per_partition accumulators exactly — None here would
-        # emit Arrow NULLs where batch emits NaN doubles (and would even
-        # vary with micro-batch boundaries via pandas dtype inference)
-        if state.exists:
-            lv, bt = state.get
-            lv = math.nan if lv is None else lv
-            bt = math.nan if bt is None else bt
-        else:
-            lv = bt = math.nan
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        # array-based loop (r11): Holt is a genuinely order-1 sequential
-        # recurrence (level feeds trend feeds level) — no parallel
-        # decomposition reproduces the fold's per-step rounding, so the
-        # win is dropping iterrows, not the arithmetic
-        t_arr = _t_ms(pdf, time_col)
-        v_arr = _f64(pdf, field)
-        c_arrs = [pdf[c].to_list() for c in carry]
-        outs = []
-        for r in range(len(t_arr)):
-            rec = (list(key) + [int(t_arr[r])]
-                   + [c[r] for c in c_arrs])
-            v = v_arr[r]
-            if not np.isnan(v):
-                if math.isnan(lv):
-                    lv, bt = float(v), 0.0
-                else:
-                    nl = alpha * float(v) + (1.0 - alpha) * (lv + bt)
-                    bt = beta * (nl - lv) + (1.0 - beta) * bt
-                    lv = nl
-            rec += [lv, bt]
-            outs.append(rec)
-        state.update((lv, bt))
-        cols = (keys + ["t_ms"] + list(carry)
-                + [f"{field}_level", f"{field}_trend"])
-        yield pd.DataFrame(outs, columns=cols)
-
-    return fn
+def _holt_kernel(state, t, pdf, *, field, alpha, beta, carry):
+    """Holt is a genuinely order-1 sequential recurrence (level feeds
+    trend feeds level) — no parallel decomposition reproduces the fold's
+    per-step rounding, so it stays a scalar loop over numpy arrays.  NaN
+    is the "no valid sample yet" sentinel, matching the batch operator's
+    per_partition accumulators exactly."""
+    lv, bt = (map(_nan_if_none, state) if state is not None
+              else (math.nan, math.nan))
+    lvl, trd = np.empty(len(t)), np.empty(len(t))
+    for r, v in enumerate(_f64(pdf, field)):
+        if not np.isnan(v):
+            if math.isnan(lv):
+                lv, bt = float(v), 0.0
+            else:
+                nl = alpha * float(v) + (1.0 - alpha) * (lv + bt)
+                bt = beta * (nl - lv) + (1.0 - beta) * bt
+                lv = nl
+        lvl[r], trd[r] = lv, bt
+    return (lv, bt), {"t_ms": t, **_carry(pdf, carry),
+                      f"{field}_level": lvl, f"{field}_trend": trd}
 
 
 def stream_holt(
@@ -1245,77 +919,44 @@ def stream_holt(
     drained stream and the batch op agree bit-for-bit (same tiebreak
     contract as stream_ewma).
     """
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{field}_level", T.DoubleType()),
-           T.StructField(f"{field}_trend", T.DoubleType())])
-    state_schema = T.StructType(
-        [T.StructField("l", T.DoubleType()),
-         T.StructField("b", T.DoubleType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _holt_state_fn(field, keys, time_col, alpha, beta, tiebreak,
-                       list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak, _doubles("l", "b"),
+        _longs("t_ms") + [sdf.schema[c] for c in carry_cols]
+        + _doubles(f"{field}_level", f"{field}_trend"),
+        partial(_holt_kernel, field=field, alpha=alpha, beta=beta,
+                carry=list(carry_cols)))
 
 
-def _hw_state_fn(field: str, keys: list[str], time_col: str,
-                 period: int, alpha: float, beta: float, gamma: float,
-                 tiebreak: str | None = None,
-                 carry: Sequence[str] = ()):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import math
-
-        if state.exists:
-            lv, bt, sv, kcount, seas = state.get
-            lv = math.nan if lv is None else lv
-            bt = math.nan if bt is None else bt
-            sv = math.nan if sv is None else sv
-            seas = list(seas)
-        else:
-            lv = bt = sv = math.nan
-            kcount, seas = 0, [0.0] * period
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        # array-based loop (r11): like Holt, the seasonal recurrence is
-        # order-1 sequential per key (level/trend/seasonal all feed the
-        # next step) — iterrows was the cost, not the arithmetic
-        t_arr = _t_ms(pdf, time_col)
-        v_arr = _f64(pdf, field)
-        c_arrs = [pdf[c].to_list() for c in carry]
-        outs = []
-        for r in range(len(t_arr)):
-            rec = (list(key) + [int(t_arr[r])]
-                   + [c[r] for c in c_arrs])
-            v = v_arr[r]
-            if not np.isnan(v):
-                p = kcount % period
-                if math.isnan(lv):
-                    lv, bt = float(v), 0.0
-                else:
-                    s_prev = seas[p]
-                    nl = (alpha * (float(v) - s_prev)
-                          + (1.0 - alpha) * (lv + bt))
-                    bt = beta * (nl - lv) + (1.0 - beta) * bt
-                    lv = nl
-                sv = gamma * (float(v) - lv) + (1.0 - gamma) * seas[p]
-                seas[p] = sv
-                kcount += 1
-            rec += [lv, bt, sv]
-            outs.append(rec)
-        state.update((lv, bt, sv, kcount, seas))
-        cols = (keys + ["t_ms"] + list(carry)
-                + [f"{field}_level", f"{field}_trend",
-                   f"{field}_seasonal"])
-        yield pd.DataFrame(outs, columns=cols)
-
-    return fn
+def _hw_kernel(state, t, pdf, *, field, period, alpha, beta, gamma, carry):
+    """Like Holt, the seasonal recurrence is order-1 sequential per key
+    (level/trend/seasonal all feed the next step): a scalar loop over
+    numpy arrays.  State: (level, trend, last seasonal, phase count,
+    seasonal[period])."""
+    if state is not None:
+        lv, bt, sv, kcount, seas = state
+        lv, bt, sv = map(_nan_if_none, (lv, bt, sv))
+        seas = list(seas)
+    else:
+        lv = bt = sv = math.nan
+        kcount, seas = 0, [0.0] * period
+    cols = np.empty((3, len(t)))
+    for r, v in enumerate(_f64(pdf, field)):
+        if not np.isnan(v):
+            p = kcount % period
+            if math.isnan(lv):
+                lv, bt = float(v), 0.0
+            else:
+                nl = (alpha * (float(v) - seas[p])
+                      + (1.0 - alpha) * (lv + bt))
+                bt = beta * (nl - lv) + (1.0 - beta) * bt
+                lv = nl
+            sv = gamma * (float(v) - lv) + (1.0 - gamma) * seas[p]
+            seas[p] = sv
+            kcount += 1
+        cols[:, r] = lv, bt, sv
+    return (lv, bt, sv, kcount, seas), {
+        "t_ms": t, **_carry(pdf, carry), f"{field}_level": cols[0],
+        f"{field}_trend": cols[1], f"{field}_seasonal": cols[2]}
 
 
 def stream_holt_winters(
@@ -1340,28 +981,14 @@ def stream_holt_winters(
     """
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{field}_level", T.DoubleType()),
-           T.StructField(f"{field}_trend", T.DoubleType()),
-           T.StructField(f"{field}_seasonal", T.DoubleType())])
-    state_schema = T.StructType(
-        [T.StructField("l", T.DoubleType()),
-         T.StructField("b", T.DoubleType()),
-         T.StructField("sv", T.DoubleType()),
-         T.StructField("k", T.LongType()),
-         T.StructField("seas", T.ArrayType(T.DoubleType()))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _hw_state_fn(field, keys, time_col, period, alpha, beta, gamma,
-                     tiebreak, list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak,
+        _doubles("l", "b", "sv") + _longs("k")
+        + [T.StructField("seas", T.ArrayType(T.DoubleType()))],
+        _longs("t_ms") + [sdf.schema[c] for c in carry_cols]
+        + _doubles(f"{field}_level", f"{field}_trend", f"{field}_seasonal"),
+        partial(_hw_kernel, field=field, period=period, alpha=alpha,
+                beta=beta, gamma=gamma, carry=list(carry_cols)))
 
 
 _STREAM_ROLLING_FUNCS = ("sum", "avg", "min", "max", "count", "stddev",
@@ -1382,7 +1009,6 @@ def _np_agg(func: str, arr: "np.ndarray", flt: str):
     through libm pow and can differ in the last ulp) — within 1 ulp of
     any other one-op square, and all stddev consumers compare at 6dp
     (driver oracles) or 1e-12 (parity tests)."""
-    import math
     if flt == "zero_missing":
         valid = np.where(np.isnan(arr), 0.0, arr)
     else:
@@ -1412,114 +1038,75 @@ def _np_agg(func: str, arr: "np.ndarray", flt: str):
     raise ValueError(f"streaming rolling does not support reducer {func!r}")
 
 
-def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
-                     zscore_threshold: float | None,
-                     carry: Sequence[str] = ()):
-    """Shared state fn for stream_rolling / stream_zscore: per-key buffer
-    of (t_ms, values) trimmed to the trailing window, serialized as one
-    JSON state string (state size = events-per-window per key, not event
-    volume). Events are processed one distinct timestamp at a time so
-    equal-timestamp peers see exactly the batch RANGE-frame semantics:
-    rolling includes all peers of the current ms, zscore excludes them.
-    ``carry`` columns pass through per row (e.g. an event id), so stream
-    output can line up row-for-row with the batch twin's."""
-    import json as _json
+def _buffer_kernel(state, t, pdf, *, rows_spec, dur_ms, zscore_threshold,
+                   carry):
+    """Shared kernel of stream_rolling / stream_zscore: per-key buffer of
+    (t_ms, values) trimmed to the trailing window, serialized as one JSON
+    state string (state size = events-per-window per key, not event
+    volume).  Equal-timestamp peers see exactly the batch RANGE-frame
+    semantics: rolling includes all peers of the current ms, zscore
+    excludes them.
 
+    The buffer and batch concatenate into one sorted int64/float64 array
+    pair; every distinct timestamp's window is a contiguous slice located
+    by ONE vectorized searchsorted over all runs, aggregated by
+    :func:`_np_agg` whose cumsum folds are bit-identical to Python sums.
+    Python re-enters once per DISTINCT timestamp (the windows genuinely
+    differ), not once per row; per-row work (carry passthrough, z-scores,
+    run broadcast) is numpy repeat/elementwise."""
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized (r10): the buffer and batch concatenate into one
-        sorted int64/float64 array pair; every distinct timestamp's
-        window is a contiguous slice located by ONE vectorized
-        searchsorted over all runs (the old per-ts head-scan eviction
-        and list `del` are gone), aggregated by :func:`_np_agg` whose
-        cumsum folds are bit-identical to the old Python sums. Python
-        re-enters once per DISTINCT timestamp (the windows genuinely
-        differ), not once per row; per-row work (carry passthrough,
-        z-scores, run broadcast) is numpy repeat/elementwise."""
-        if state.exists:
-            d = _json.loads(state.get[0])
-        else:
-            d = {"t": [], **{c: [] for c in in_cols}}
-        pdf = _whole_group(pdfs, time_col)
-        if zscore_threshold is None:
-            cols = (keys + ["t_ms"] + list(carry)
-                    + [r[0] for r in rows_spec])
-        else:
-            cols = keys + ["t_ms"] + list(carry)
-            for _, in_col, _f, _fl in rows_spec:
-                cols += [in_col, f"{in_col}_zscore", f"{in_col}_anomaly"]
-        n = len(pdf)
-        if not n:
-            state.update((state.get[0] if state.exists else
-                          _json.dumps(d),))
-            return  # yield nothing: no output rows for this group
-        t_new = _t_ms(pdf, time_col)
-        t_all = np.concatenate([np.asarray(d["t"], dtype=np.int64), t_new])
-        v_all = {c: np.concatenate([
-            np.array([np.nan if x is None else x for x in d[c]],
-                     dtype=np.float64),
-            _f64(pdf, c)]) for c in in_cols}
-        # distinct-timestamp runs of the batch, and each run's window
-        # slice bounds over the combined array: (t-dur, t] for rolling,
-        # (t-dur, t) for zscore (equal-ts peers excluded, wherever they
-        # arrived — the batch RANGE-frame rule)
-        starts = np.nonzero(np.r_[True, t_new[1:] != t_new[:-1]])[0]
-        lens = np.diff(np.r_[starts, n])
-        tu = t_new[starts]
-        lo = np.searchsorted(t_all, tu - dur_ms, side="right")
-        hi = np.searchsorted(t_all, tu, side="right")
-        lim = np.searchsorted(t_all, tu, side="left")
-        out_cols = {"t_ms": t_new}
-        for c in carry:
-            out_cols[c] = pdf[c].to_numpy(dtype=object)
-        if zscore_threshold is None:
-            per_run = {out: [] for out, _i, _f, _fl in rows_spec}
+    d = (json.loads(state[0]) if state is not None
+         else {"t": [], **{c: [] for c in in_cols}})
+    n = len(t)
+    t_all = np.concatenate([np.asarray(d["t"], dtype=np.int64), t])
+    v_all = {c: np.concatenate([
+        np.array([np.nan if x is None else x for x in d[c]],
+                 dtype=np.float64),
+        _f64(pdf, c)]) for c in in_cols}
+    # distinct-timestamp runs of the batch, and each run's window slice
+    # bounds over the combined array: (t-dur, t] for rolling, (t-dur, t)
+    # for zscore (equal-ts peers excluded, wherever they arrived — the
+    # batch RANGE-frame rule)
+    starts = np.nonzero(np.r_[True, t[1:] != t[:-1]])[0]
+    lens = np.diff(np.r_[starts, n])
+    tu = t[starts]
+    lo = np.searchsorted(t_all, tu - dur_ms, side="right")
+    hi = np.searchsorted(t_all, tu, side="right")
+    lim = np.searchsorted(t_all, tu, side="left")
+    out = {"t_ms": t, **_carry(pdf, carry)}
+    if zscore_threshold is None:
+        for name, in_col, func, flt in rows_spec:
+            vals = [_np_agg(func, v_all[in_col][lo[r]:hi[r]], flt)
+                    for r in range(len(tu))]
+            out[name] = np.repeat(
+                np.array(vals, dtype=np.int64) if func == "count"
+                else np.array([np.nan if v is None else v for v in vals],
+                              dtype=np.float64), lens)
+    else:
+        for in_col in in_cols:
+            mu_run, sd_run = np.empty(len(tu)), np.empty(len(tu))
             for r in range(len(tu)):
-                for out, in_col, func, flt in rows_spec:
-                    per_run[out].append(
-                        _np_agg(func, v_all[in_col][lo[r]:hi[r]], flt))
-            for out, _i, func, _fl in rows_spec:
-                vals = per_run[out]
-                if func == "count":
-                    out_cols[out] = np.repeat(
-                        np.array(vals, dtype=np.int64), lens)
-                else:
-                    out_cols[out] = np.repeat(np.array(
-                        [np.nan if v is None else v for v in vals],
-                        dtype=np.float64), lens)
-        else:
-            mu_run = {c: np.empty(len(tu)) for c in in_cols}
-            sd_run = {c: np.empty(len(tu)) for c in in_cols}
-            for r in range(len(tu)):
-                for c in in_cols:
-                    w = v_all[c][lo[r]:lim[r]]
-                    m = _np_agg("avg", w, "ignore_missing")
-                    s = _np_agg("stddev", w, "ignore_missing")
-                    mu_run[c][r] = np.nan if m is None else m
-                    sd_run[c][r] = np.nan if s is None else s
-            for _o, in_col, _f, _fl in rows_spec:
-                x = v_all[in_col][-n:]
-                mu = np.repeat(mu_run[in_col], lens)
-                sd = np.repeat(sd_run[in_col], lens)
-                bad = np.isnan(x) | np.isnan(sd) | (sd == 0)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    z = np.where(bad, np.nan, (x - mu) / sd)
-                out_cols[in_col] = x
-                out_cols[f"{in_col}_zscore"] = z
-                out_cols[f"{in_col}_anomaly"] = (
-                    ~np.isnan(z) & (np.abs(z) > zscore_threshold))
-        # state: everything still inside the LAST timestamp's window,
-        # current ms included — exactly the old progressive eviction's
-        # end state on sorted times
-        keep = int(np.searchsorted(t_all, tu[-1] - dur_ms, side="right"))
-        state.update((_json.dumps(
-            {"t": [int(x) for x in t_all[keep:]],
-             **{c: [None if np.isnan(x) else float(x)
-                    for x in v_all[c][keep:]] for c in in_cols}}),))
-        yield _key_frame(key, keys, n, out_cols)
-
-    return fn
+                w = v_all[in_col][lo[r]:lim[r]]
+                m = _np_agg("avg", w, "ignore_missing")
+                s = _np_agg("stddev", w, "ignore_missing")
+                mu_run[r] = np.nan if m is None else m
+                sd_run[r] = np.nan if s is None else s
+            x = v_all[in_col][-n:]
+            mu, sd = np.repeat(mu_run, lens), np.repeat(sd_run, lens)
+            bad = np.isnan(x) | np.isnan(sd) | (sd == 0)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                z = np.where(bad, np.nan, (x - mu) / sd)
+            out[in_col] = x
+            out[f"{in_col}_zscore"] = z
+            out[f"{in_col}_anomaly"] = (~np.isnan(z)
+                                        & (np.abs(z) > zscore_threshold))
+    # state: everything still inside the LAST timestamp's window, current
+    # ms included
+    keep = int(np.searchsorted(t_all, tu[-1] - dur_ms, side="right"))
+    return (json.dumps(
+        {"t": [int(x) for x in t_all[keep:]],
+         **{c: [None if np.isnan(x) else float(x)
+                for x in v_all[c][keep:]] for c in in_cols}}),), out
 
 
 def stream_rolling(
@@ -1562,23 +1149,15 @@ def stream_rolling(
             raise ValueError(
                 f"stream_rolling supports filters {_ROLLING_FILTERS}, "
                 f"got {flt!r} for {out!r}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
+    return _keyed_scan(
+        sdf, partition_by, time_col, None,
+        [T.StructField("buf", T.StringType())],
+        _longs("t_ms") + [sdf.schema[c] for c in carry_cols]
         + [T.StructField(out,
                          T.LongType() if func == "count" else T.DoubleType())
-           for out, _in, func, _fl in rows_spec])
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _buffer_state_fn(rows_spec, keys, time_col, dur_ms, None,
-                         list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+           for out, _in, func, _fl in rows_spec],
+        partial(_buffer_kernel, rows_spec=rows_spec, dur_ms=dur_ms,
+                zscore_threshold=None, carry=list(carry_cols)))
 
 
 def stream_zscore(
@@ -1608,26 +1187,19 @@ def stream_zscore(
     dur_ms = window_duration_ms(window)
     if dur_ms is None:
         raise ValueError(f"stream_zscore needs a fixed window, got {window!r}")
-    rows_spec = [(f, f, "zscore", "ignore_missing") for f in fields]
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
     per_field = []
     for f in fields:
-        per_field += [T.StructField(f, T.DoubleType()),
-                      T.StructField(f"{f}_zscore", T.DoubleType()),
-                      T.StructField(f"{f}_anomaly", T.BooleanType())]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols] + per_field)
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _buffer_state_fn(rows_spec, keys, time_col, dur_ms, float(threshold),
-                         list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+        per_field += _doubles(f, f"{f}_zscore") + [
+            T.StructField(f"{f}_anomaly", T.BooleanType())]
+    return _keyed_scan(
+        sdf, partition_by, time_col, None,
+        [T.StructField("buf", T.StringType())],
+        _longs("t_ms") + [sdf.schema[c] for c in carry_cols] + per_field,
+        partial(_buffer_kernel,
+                rows_spec=[(f, f, "zscore", "ignore_missing")
+                           for f in fields],
+                dur_ms=dur_ms, zscore_threshold=float(threshold),
+                carry=list(carry_cols)))
 
 
 def stream_exact_dedup(
@@ -1825,11 +1397,44 @@ class StreamPipeline:
                                  self._time_col, tiebreak, carry_cols)
 
 
-def _first_seen_state_fn(key_cols: list[str], payload_cols: list[str],
-                         order_col: str, ttl_ms: int | None = None,
-                         time_col: str | None = None):
+def _claim_gate(keyed: DataFrame, out_fields: list[T.StructField],
+                order_col: str, ttl, time_col: str,
+                late: str) -> DataFrame:
+    """The first-claim state machine shared by :func:`stream_first_seen`
+    and the two near-duplicate gates.  ``out_fields`` are the key column
+    then the payload columns: per key value the first row ever seen
+    (ties inside a micro-batch to the smallest ``order_col``) emits
+    ``out_fields`` and claims the key; every later row with that key is
+    suppressed.
+
+    Claim-TTL design note: the TTL is EVENT-TIME, watermark-bounded — a
+    claim expires when the stream's watermark passes the key's newest
+    sighting + ttl, at which point the state-store row is physically
+    deleted and a later arrival re-claims (re-emits) the key.  Event time
+    was chosen over GroupStateTimeout.ProcessingTimeTimeout deliberately:
+    processing-time timeouts make Spark's shouldRunAnotherBatch
+    unconditionally true, so an availableNow drain NEVER terminates
+    (measured: the drain hangs), and wall-clock eviction is not
+    replayable — re-running yesterday's data today would evict different
+    keys.  Event-time TTL is deterministic, replay-safe, and terminates:
+    after the last data batch the engine runs exactly the extra batches
+    needed to fire timers the advanced watermark unlocked."""
+    key_col, *payload_cols = [f.name for f in out_fields]
+    state_fields = [T.StructField("seen", T.BooleanType())]
+    ttl_ms = None
+    if ttl is not None:
+        ttl_ms = ttl if isinstance(ttl, int) else window_duration_ms(ttl)
+        if not ttl_ms or ttl_ms <= 0:
+            raise ValueError(f"ttl must be a positive duration, got {ttl!r}")
+        if time_col not in keyed.columns:
+            raise ValueError(
+                f"ttl needs event-time column {time_col!r} in the frame "
+                f"(claim expiry is watermark-bounded)")
+        keyed = keyed.withWatermark(time_col, late)
+        state_fields += _longs("deadline")
+
     def empty() -> pd.DataFrame:
-        return pd.DataFrame(columns=key_cols + payload_cols)
+        return pd.DataFrame(columns=[key_col, *payload_cols])
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         if ttl_ms is not None and state.hasTimedOut:
@@ -1870,46 +1475,16 @@ def _first_seen_state_fn(key_cols: list[str], payload_cols: list[str],
             arm()
         else:
             state.update((True,))
-        yield pd.DataFrame(
-            [list(key) + [first[c] for c in payload_cols]],
-            columns=key_cols + payload_cols)
+        yield pd.DataFrame([list(key) + [first[c] for c in payload_cols]],
+                           columns=[key_col, *payload_cols])
 
-    return fn
-
-
-_FIRST_SEEN_TTL_NOTE = """\
-Claim-TTL design note (shared by stream_first_seen and the two near-dup
-gates): the TTL is EVENT-TIME, watermark-bounded — a claim expires when
-the stream's watermark passes the key's newest sighting + ttl, at which
-point the state-store row is physically deleted and a later arrival
-re-claims (re-emits) the key.  Event time was chosen over
-GroupStateTimeout.ProcessingTimeTimeout deliberately: processing-time
-timeouts make Spark's shouldRunAnotherBatch unconditionally true, so an
-availableNow drain NEVER terminates (measured: the drain hangs), and
-wall-clock eviction is not replayable — re-running yesterday's data
-today would evict different keys.  Event-time TTL is deterministic,
-replay-safe, and terminates: after the last data batch the engine runs
-exactly the extra batches needed to fire timers the advanced watermark
-unlocked."""
-
-
-def _first_seen_ttl_prep(keyed: DataFrame, ttl, time_col: str,
-                         late: str):
-    """Validate + normalize the claim-TTL options: returns
-    (watermarked frame, ttl_ms, extra state fields).  ``ttl=None``
-    passes the frame through untouched with the 1-field seen schema."""
-    if ttl is None:
-        return keyed, None, [T.StructField("seen", T.BooleanType())]
-    ms = ttl if isinstance(ttl, int) else window_duration_ms(ttl)
-    if not ms or ms <= 0:
-        raise ValueError(f"ttl must be a positive duration, got {ttl!r}")
-    if time_col not in keyed.columns:
-        raise ValueError(
-            f"ttl needs event-time column {time_col!r} in the frame "
-            f"(claim expiry is watermark-bounded)")
-    return (keyed.withWatermark(time_col, late), ms,
-            [T.StructField("seen", T.BooleanType()),
-             T.StructField("deadline", T.LongType())])
+    return keyed.groupBy(key_col).applyInPandasWithState(
+        fn,
+        outputStructType=T.StructType(out_fields),
+        stateStructType=T.StructType(state_fields),
+        outputMode="append",
+        timeoutConf=(GroupStateTimeout.EventTimeTimeout
+                     if ttl_ms is not None else GroupStateTimeout.NoTimeout))
 
 
 def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
@@ -1940,98 +1515,73 @@ def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
     maybe-seen keys reach the stateful operator.  Append mode: each
     admitted row emits exactly once per claim epoch, so the sink IS
     the deduped corpus (dedup the sink offline if ``ttl`` re-admits
-    matter downstream).  See ``_FIRST_SEEN_TTL_NOTE`` for why the TTL
-    is event-time rather than processing-time.
+    matter downstream).  See :func:`_claim_gate` for why the TTL is
+    event-time rather than processing-time.
     """
-    key_fields = [sdf.schema[key_col]]
-    pay_fields = [sdf.schema[c] for c in payload_cols]
-    out_schema = T.StructType(key_fields + pay_fields)
-    sdf, ms, state_fields = _first_seen_ttl_prep(sdf, ttl, time_col,
-                                                 late)
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        _first_seen_state_fn([key_col], list(payload_cols), order_col,
-                             ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
+    return _claim_gate(sdf, [sdf.schema[c] for c in (key_col, *payload_cols)],
+                       order_col, ttl, time_col, late)
 
 
-def _cusum_state_fn(field: str, keys: list[str], time_col: str,
-                    t_mic: int, k_mic: int, h_mic: int,
-                    tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        """Vectorized: the clipped recurrence s_j = max(0, s_{j-1} + a_j)
-        has the closed form s_j = P_j - min(0, runmin(P)_j) with
-        P = s_0 + cumsum(a) (the same identity the batch operator uses,
-        __spark_entry__ cusum oracle), so whole alarm-free stretches are
-        two int64 cumsums; Python re-enters only once per ALARM (reset
-        to 0 breaks the closed form there, like xchart's firing events).
-        All arithmetic is exact int64 micro-units -> outputs identical
-        to the former per-row fold by construction. Per-element
-        ``round(round(v, 6) * 1e6)`` stays Python: decimal
-        correctly-rounded round() has no numpy twin (np.round scales by
-        1e6 in float space — the documented half-even trap)."""
-        sp, sn = state.get if state.exists else (0, 0)
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = keys + ["t_ms", "direction", "stat"]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
-        v = _f64(pdf, field)
-        ok = ~np.isnan(v)
-        t = _t_ms(pdf, time_col)[ok]
-        m = np.fromiter((int(round(round(x, 6) * 1e6)) for x in v[ok]),
-                        dtype=np.int64, count=int(ok.sum()))
-        a_p = (m - t_mic) - k_mic       # + side increments
-        a_n = (t_mic - m) - k_mic       # - side increments
-        # overflow guard (r10 review): the carried side never exceeds
-        # h (it resets above), so the block prefix sum is bounded by
-        # h + blk*max|increment| — the old Python-int fold was exact at
-        # any magnitude, the int64 cumsum would WRAP silently instead.
-        # 2048 increments of |a| <= 2^51 stay ~2^62 < 2^63: plenty for
-        # any physical series (|value| < 2.2e9 at 1e-6 resolution);
-        # beyond that, fail loudly with the rescale hint.
-        if len(m) and max(int(np.abs(a_p).max()),
-                          int(np.abs(a_n).max())) > (1 << 51):
-            raise ValueError(
-                "stream_cusum: |value - target| too large for exact "
-                "micro-unit arithmetic (>~2.2e9 above the target); "
-                "rescale the series or move the target")
-        outs_t, outs_dir, outs_stat = [], [], []
-        i, n = 0, len(m)
-        # blocked: an alarm resets the fold, so the closed form restarts
-        # after each one — bounding the restart to a 2048-element block
-        # keeps dense-alarm batches O(n + alarms*B) instead of the
-        # quadratic O(alarms * n) a whole-suffix recompute would cost
-        blk = 2048
-        while i < n:
-            e = min(i + blk, n)
-            p = sp + np.cumsum(a_p[i:e])
-            q = sn + np.cumsum(a_n[i:e])
-            sp_arr = p - np.minimum(np.minimum.accumulate(p), 0)
-            sn_arr = q - np.minimum(np.minimum.accumulate(q), 0)
-            alarm = (sp_arr > h_mic) | (sn_arr > h_mic)
-            j = int(np.argmax(alarm)) if alarm.any() else -1
-            if j < 0:
-                sp, sn = int(sp_arr[-1]), int(sn_arr[-1])
-                i = e
-                continue
-            sp1, sn1 = int(sp_arr[j]), int(sn_arr[j])
-            up = sp1 >= sn1
-            outs_t.append(int(t[i + j]))
-            outs_dir.append("up" if up else "down")
-            outs_stat.append(round((sp1 if up else sn1) / 1e6, 6))
-            sp = sn = 0
-            i += j + 1
-        state.update((sp, sn))
-        yield _key_frame(key, keys, len(outs_t),
-                         {"t_ms": np.array(outs_t, dtype=np.int64),
-                          "direction": np.array(outs_dir, dtype=object),
-                          "stat": np.array(outs_stat, dtype=np.float64)})
-
-    return fn
+def _cusum_kernel(state, t, pdf, *, field, t_mic, k_mic, h_mic):
+    """The clipped recurrence s_j = max(0, s_{j-1} + a_j) has the closed
+    form s_j = P_j - min(0, runmin(P)_j) with P = s_0 + cumsum(a) (the
+    same identity the batch operator uses, __spark_entry__ cusum oracle),
+    so whole alarm-free stretches are two int64 cumsums; Python re-enters
+    only once per ALARM (reset to 0 breaks the closed form there, like
+    xchart's firing events).  All arithmetic is exact int64 micro-units
+    -> outputs identical to the sequential fold by construction.
+    Per-element ``round(round(v, 6) * 1e6)`` stays Python: decimal
+    correctly-rounded round() has no numpy twin (np.round scales by 1e6
+    in float space — the documented half-even trap)."""
+    sp, sn = state if state is not None else (0, 0)
+    v = _f64(pdf, field)
+    ok = ~np.isnan(v)
+    t = t[ok]
+    m = np.fromiter((int(round(round(x, 6) * 1e6)) for x in v[ok]),
+                    dtype=np.int64, count=int(ok.sum()))
+    a_p = (m - t_mic) - k_mic       # + side increments
+    a_n = (t_mic - m) - k_mic       # - side increments
+    # overflow guard: the carried side never exceeds h (it resets
+    # above), so the block prefix sum is bounded by h + blk*max|increment|
+    # — a Python-int fold is exact at any magnitude, the int64 cumsum
+    # would WRAP silently instead.  2048 increments of |a| <= 2^51 stay
+    # ~2^62 < 2^63: plenty for any physical series (|value| < 2.2e9 at
+    # 1e-6 resolution); beyond that, fail loudly with the rescale hint.
+    if len(m) and max(int(np.abs(a_p).max()),
+                      int(np.abs(a_n).max())) > (1 << 51):
+        raise ValueError(
+            "stream_cusum: |value - target| too large for exact "
+            "micro-unit arithmetic (>~2.2e9 above the target); "
+            "rescale the series or move the target")
+    outs_t, outs_dir, outs_stat = [], [], []
+    i, n = 0, len(m)
+    # blocked: an alarm resets the fold, so the closed form restarts
+    # after each one — bounding the restart to a 2048-element block
+    # keeps dense-alarm batches O(n + alarms*B) instead of the
+    # quadratic O(alarms * n) a whole-suffix recompute would cost
+    blk = 2048
+    while i < n:
+        e = min(i + blk, n)
+        p = sp + np.cumsum(a_p[i:e])
+        q = sn + np.cumsum(a_n[i:e])
+        sp_arr = p - np.minimum(np.minimum.accumulate(p), 0)
+        sn_arr = q - np.minimum(np.minimum.accumulate(q), 0)
+        alarm = (sp_arr > h_mic) | (sn_arr > h_mic)
+        j = int(np.argmax(alarm)) if alarm.any() else -1
+        if j < 0:
+            sp, sn = int(sp_arr[-1]), int(sn_arr[-1])
+            i = e
+            continue
+        sp1, sn1 = int(sp_arr[j]), int(sn_arr[j])
+        up = sp1 >= sn1
+        outs_t.append(int(t[i + j]))
+        outs_dir.append("up" if up else "down")
+        outs_stat.append(round((sp1 if up else sn1) / 1e6, 6))
+        sp = sn = 0
+        i += j + 1
+    return (sp, sn), {"t_ms": np.array(outs_t, dtype=np.int64),
+                      "direction": np.array(outs_dir, dtype=object),
+                      "stat": np.array(outs_stat, dtype=np.float64)}
 
 
 def stream_cusum(
@@ -2068,27 +1618,33 @@ def stream_cusum(
         raise ValueError("stream_cusum: |target|/k/h above ~2.2e9 "
                          "overflow exact micro-unit arithmetic; "
                          "rescale the series")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k_] for k_ in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType()),
-                      T.StructField("direction", T.StringType()),
-                      T.StructField("stat", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("sp", T.LongType()),
-                                 T.StructField("sn", T.LongType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _cusum_state_fn(field, keys, time_col, t_mic, k_mic, h_mic,
-                        tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak, _longs("sp", "sn"),
+        _longs("t_ms") + [T.StructField("direction", T.StringType())]
+        + _doubles("stat"),
+        partial(_cusum_kernel, field=field, t_mic=t_mic, k_mic=k_mic,
+                h_mic=h_mic))
 
 
 # ---------------------------------------------------------------------------
 # streaming near-duplicate (SimHash) ingestion gate
 # ---------------------------------------------------------------------------
+
+#: The batch tokenizer's law (``datapipe.dedup._tokens``): split on Java
+#: regex ``\s`` — the ASCII class [ \t\n\x0B\f\r], NOT Python's Unicode
+#: ``\s`` — and drop empty tokens.  Dropping the empties strips edge
+#: whitespace of exactly that class (``F.trim`` itself strips only
+#: U+0020), so control characters and NBSP at a document's edges stay in
+#: its first/last token, as they do on the JVM.
+_ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _ascii_tokens(text) -> list[str]:
+    """Whitespace tokens of ``text`` under the batch law; NULL -> []."""
+    if not isinstance(text, str):
+        return []
+    return [t for t in _ASCII_WS.split(text) if t]
+
 
 def _simhash64_py(text: str, max_tokens: int = 1 << 20) -> tuple[int, int] | None:
     """Row-wise SimHash identical to the batch
@@ -2098,15 +1654,8 @@ def _simhash64_py(text: str, max_tokens: int = 1 << 20) -> tuple[int, int] | Non
     bit, sign of the sum.  Returns unsigned 32-bit ``(sim_hi,
     sim_lo)`` — the cross-engine-safe halves."""
     import hashlib
-    import re as _re
 
-    # NB: plain str.strip() would remove *Unicode* whitespace
-    # (U+00A0, U+2028, ...) that Java's \s / Spark trim does not —
-    # strip only the ASCII class the split uses so edge tokens match
-    # the batch twin bit-for-bit.
-    toks = [t for t in _re.split("[ \t\n\x0b\f\r]+",
-                                 text.strip(" \t\n\x0b\f\r"))
-            if t][:max_tokens]
+    toks = _ascii_tokens(text)[:max_tokens]
     if not toks:
         # the batch simhash64 explode drops token-less docs; mirror it
         return None
@@ -2146,7 +1695,7 @@ def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Vectorized twin of _simhash64_py (r15, guide §4.2): tokenize
-        # per doc with the same Java-trim/ASCII-\s law, md5 only the
+        # per doc with the same ASCII-\s law, md5 only the
         # batch-chunk's UNIQUE tokens (C md5; corpus words repeat, so
         # this is ~10x fewer digests), unpack each 64-bit hash into a
         # ±1 bit row once per unique token, then gather + segment-sum
@@ -2155,21 +1704,13 @@ def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
         # ±1 fold, same >0 sign rule, token-less docs dropped.  Chunked
         # at 2048 docs to bound the (tokens x 64) gather matrix.
         import hashlib
-        import re as _re
-        ws = _re.compile(r"[ \t\n\x0b\f\r]+")
         md5 = hashlib.md5
         cap = 1 << 20
         shifts = np.arange(64, dtype=np.uint64)
         pow_lo = (1 << np.arange(32, dtype=np.uint64)).astype(np.int64)
 
         def chunk_rows(pdf: pd.DataFrame):
-            tok_lists = []
-            for txt in pdf[text_col]:
-                if not isinstance(txt, str):
-                    txt = ""
-                tok_lists.append([t for t in
-                                  ws.split(txt.strip(" \t\n\x0b\f\r"))
-                                  if t][:cap])
+            tok_lists = [_ascii_tokens(txt)[:cap] for txt in pdf[text_col]]
             counts = np.array([len(t) for t in tok_lists])
             keep = counts > 0  # token-less docs: batch parity (dropped)
             if not keep.any():
@@ -2184,13 +1725,10 @@ def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
             # ±1 per bit, one row per UNIQUE token, gathered per token
             ubits = (((hs[:, None] >> shifts[None, :]) & 1)
                      .astype(np.int32) * 2 - 1)
-            # offsets of token-less TRAILING docs equal len(flat) which
-            # reduceat rejects — clamp them (their garbage segment is
-            # dropped by [keep] anyway)
-            offs = np.minimum(
-                np.concatenate([[0], np.cumsum(counts)[:-1]]),
-                len(flat) - 1)
-            sums = np.add.reduceat(ubits[inv], offs)[keep]
+            # segment offsets over the token-bearing docs only: each is
+            # < len(flat), and every segment ends where the next begins
+            offs = np.concatenate([[0], np.cumsum(counts[keep])[:-1]])
+            sums = np.add.reduceat(ubits[inv], offs)
             pos = (sums > 0)
             lo = pos[:, :32] @ pow_lo
             hi = pos[:, 32:] @ pow_lo
@@ -2248,7 +1786,7 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
                          f"got {n_bands}")
     if ttl is not None and time_col not in sdf.columns:
         # the carry-schema build below would KeyError first — raise the
-        # same clear contract error _first_seen_ttl_prep gives
+        # same clear contract error _claim_gate gives
         raise ValueError(
             f"ttl needs event-time column {time_col!r} in the frame "
             f"(claim expiry is watermark-bounded)")
@@ -2269,25 +1807,9 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
     carry = [F.col(time_col)] if ttl is not None else []
     keyed = sh.select(F.col(id_col), *carry,
                       F.explode(bands).alias("band"))
-    out_schema = T.StructType([T.StructField("band", T.StringType()),
-                               sdf.schema[id_col]])
-    keyed, ms, state_fields = _first_seen_ttl_prep(keyed, ttl, time_col,
-                                                   late)
-    return keyed.groupBy("band").applyInPandasWithState(
-        _first_seen_state_fn(["band"], [id_col], id_col, ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
-
-
-#: Java ``String.trim`` strips every char <= U+0020 from both ends;
-#: Java regex ``\s`` is the ASCII class [ \t\n\x0B\f\r].  Both must be
-#: replayed exactly (NOT Python ``str.split``/``\s``, whose whitespace
-#: includes Unicode spaces) so the Arrow engine's shingles are
-#: byte-identical to the JVM tokenizer's.
-_JAVA_TRIM_CHARS = "".join(chr(c) for c in range(0x21))
+    return _claim_gate(keyed, [T.StructField("band", T.StringType()),
+                               sdf.schema[id_col]],
+                       id_col, ttl, time_col, late)
 
 
 def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
@@ -2300,8 +1822,8 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
     boundaries of the whole batch.  Emits the IDENTICAL
     ``(id, *carry, band)`` rows as the interpreted HOF fold it
     replaces: h1/h2 are the first/second 4 md5 bytes big-endian
-    (== ``conv(md5_hex[0:8], 16, 10)``), the Java trim/ASCII-``\\s``
-    token law is replayed exactly (see ``_JAVA_TRIM_CHARS``), an empty
+    (== ``conv(md5_hex[0:8], 16, 10)``), the ASCII-``\\s``
+    token law is replayed exactly (see ``_ASCII_WS``), an empty
     or NULL text yields the single empty-string shingle the JVM
     ``concat_ws`` produced, and the band digest is the same
     ``md5("b|m0|..|m3")`` hex string."""
@@ -2315,8 +1837,6 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import re
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
         md5 = hashlib.md5
         ks = np.arange(num_hashes, dtype=np.uint64)
 
@@ -2326,10 +1846,8 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
                 continue
             h1l, h2l, offs = [], [], [0]
             for text in pdf[text_col]:
-                if not isinstance(text, str):
-                    text = ""  # NULL text == empty: one "" shingle
-                toks = [t for t in
-                        ws.split(text.strip(_JAVA_TRIM_CHARS)) if t]
+                # NULL text == empty: one "" shingle
+                toks = _ascii_tokens(text)
                 n = max(len(toks) - (shingle_n - 1), 1)
                 for i in range(n):
                     d = md5(" ".join(
@@ -2368,10 +1886,7 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     """Stateless per-row MinHash band keys for streaming frames — the
     batch ``minhash_signature`` is a shingle explode + per-doc min
     aggregate (a streaming agg that could not feed append-mode state);
-    this computes the IDENTICAL md5-derived signatures row-locally with
-    higher-order-function folds, entirely JVM-side (no Python at all —
-    contrast :func:`simhash_rowwise`, whose 64-bit counting genuinely
-    needs an Arrow batch).  Same shingling (``greatest(n_toks-2, 1)``
+    this computes the IDENTICAL signatures row-locally.  Same shingling (``greatest(n_toks-2, 1)``
     slices), same Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32``
     derivation, same band digests — a batch SQL twin over
     ``word_shingles`` replays it exactly.
@@ -2383,9 +1898,9 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     shingles, numpy ``minimum.reduceat`` for the per-doc folds;
     measured 3.3x the interpreted-HOF throughput that previously
     dominated the drain, guide §4.2 "heavy lifting in native code"),
-    byte-identical by the Java-``trim``/ASCII-``\\s`` tokenizer replay
-    below and pinned by the cross-batch equality tests against the
-    batch ``lsh_band_buckets``.  The xxhash64 fast path stays on the
+    byte-identical by the ASCII-``\\s`` tokenizer replay
+    (:func:`_ascii_tokens`) and pinned by the cross-batch equality tests
+    against the batch ``lsh_band_buckets``.  The xxhash64 fast path stays on the
     JVM HOF fold — its per-shingle cost is a seeded integer hash, not
     an md5+hex parse, and reproducing Spark's multi-column xxhash64
     seed chain outside the JVM would be a second implementation of the
@@ -2396,6 +1911,8 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     if hash_fn == "md5":
         return _minhash_bands_arrow(sdf, text_col, id_col, num_hashes,
                                     band_size, shingle_n, carry_cols)
+    if hash_fn != "xxhash64":
+        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
     toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
                     lambda t: t != F.lit(""))
     count = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(1))
@@ -2409,24 +1926,16 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     # times interpreted; measured 7.6x slower at sf0.1
     init = ", ".join(f"'m{k}', CAST({two32} AS BIGINT)"
                      for k in range(num_hashes))
-    if hash_fn == "md5":
-        def _sh_hash(s):
-            return F.struct(
-                F.conv(F.md5(s).substr(1, 8), 16, 10).cast("long")
-                .alias("h1"),
-                F.conv(F.md5(s).substr(9, 8), 16, 10).cast("long")
-                .alias("h2"))
-    elif hash_fn == "xxhash64":
-        # the production fast path (same split as the batch
-        # minhash_signature): no hex parse, Spark-only values
-        def _sh_hash(s):
-            d = F.xxhash64(s)
-            return F.struct(
-                F.pmod(d, F.lit(two32)).alias("h1"),
-                F.pmod(F.shiftrightunsigned(d, 32), F.lit(two32))
-                .alias("h2"))
-    else:
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
+
+    # the production fast path (same split as the batch
+    # minhash_signature): no hex parse, Spark-only values
+    def _sh_hash(s):
+        d = F.xxhash64(s)
+        return F.struct(
+            F.pmod(d, F.lit(two32)).alias("h1"),
+            F.pmod(F.shiftrightunsigned(d, 32), F.lit(two32))
+            .alias("h2"))
+
     carry = [F.col(c) for c in carry_cols]
     hs = F.transform(sh, _sh_hash)
 
@@ -2443,22 +1952,11 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
         F.col(id_col), *[F.col(c) for c in carry_cols],
         *[F.col(f"__mh.m{k}").alias(f"m{k}")
           for k in range(num_hashes)])
-    n_bands = num_hashes // band_size
-    if hash_fn == "md5":
-        bands = F.array(*[
-            F.md5(F.concat_ws("|", F.lit(str(b)),
-                              *[F.col(f"m{b * band_size + i}")
-                                .cast("string")
-                                for i in range(band_size)]))
-            for b in range(n_bands)
-        ])
-    else:
-        bands = F.array(*[
-            F.xxhash64(F.lit(b), *[F.col(f"m{b * band_size + i}")
-                                   for i in range(band_size)])
-            .cast("string")
-            for b in range(n_bands)
-        ])
+    bands = F.array(*[
+        F.xxhash64(F.lit(b), *[F.col(f"m{b * band_size + i}")
+                               for i in range(band_size)]).cast("string")
+        for b in range(num_hashes // band_size)
+    ])
     return sig.select(F.col(id_col), *[F.col(c) for c in carry_cols],
                       F.explode(bands).alias("band"))
 
@@ -2513,84 +2011,63 @@ def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
                .parquet(index_path.rstrip("/") + "/bands")
                .select("band").distinct().persist())
         keyed = keyed.join(idx, "band", "left_anti")
-    out_schema = T.StructType([T.StructField("band", T.StringType()),
-                               sdf.schema[id_col]])
-    keyed, ms, state_fields = _first_seen_ttl_prep(keyed, ttl, time_col,
-                                                   late)
-    return keyed.groupBy("band").applyInPandasWithState(
-        _first_seen_state_fn(["band"], [id_col], id_col, ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
+    return _claim_gate(keyed, [T.StructField("band", T.StringType()),
+                               sdf.schema[id_col]],
+                       id_col, ttl, time_col, late)
 
 
-def _xchart_state_fn(field: str, keys: list[str], time_col: str,
-                     t_mic: int, s_mic: int, tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import numpy as np
-
-        prior = list(state.get[0]) if state.exists else []
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = keys + ["t_ms", "rule", "side", "value"]
-        vals = pdf[field]
-        mask = vals.notna()
-        n = int(mask.sum())
-        if not n:
-            state.update(([int(x) for x in prior],))
-            return  # yield nothing: no output rows for this group
-        # micro-unit deviations: element-wise Python round (half-even
-        # at 6dp, then the 1e6 pin) — EXACTLY the scalar fold's double
-        # rounding, which np.round does not reproduce for every double
-        ds = np.fromiter(
-            (int(round(round(float(v), 6) * 1e6)) - t_mic
-             for v in vals[mask]), dtype=np.int64, count=n)
-        t_ms = np.fromiter(
-            (t.value // 10**6 for t in pdf.loc[mask, time_col]),
-            dtype=np.int64, count=n)
-        # vectorized window rules over the ring-prefixed sequence: the
-        # per-event ring of the scalar version is reconstructable as
-        # "the <=8 deviations ending at position j", so every Western
-        # Electric count becomes a cumulative-sum difference.  j is the
-        # absolute position of batch event i in (prior + batch); the
-        # j>=7 guard is the scalar len(sd)>=8 ring-full condition.
-        seq = np.concatenate([np.asarray(prior, dtype=np.int64), ds])
-        j = np.arange(len(prior), len(seq))
-        fire: dict[str, tuple] = {}
-        for side, sgn in (("high", 1), ("low", -1)):
-            s = sgn * seq
-            c1 = np.concatenate([[0], np.cumsum(s > s_mic)])
-            c2 = np.concatenate([[0], np.cumsum(s > 2 * s_mic)])
-            cp = np.concatenate([[0], np.cumsum(s > 0)])
-            cur = s[j]
-            fire[side] = (
-                cur > 3 * s_mic,
-                (cur > 2 * s_mic)
-                & (c2[j + 1] - c2[np.maximum(j - 2, 0)] >= 2),
-                (cur > s_mic)
-                & (c1[j + 1] - c1[np.maximum(j - 4, 0)] >= 4),
-                (j >= 7) & (cp[j + 1] - cp[np.maximum(j - 7, 0)] >= 8),
-            )
-        any_fire = np.zeros(n, dtype=bool)
-        for rules in fire.values():
-            for r in rules:
-                any_fire |= r
-        outs = []
-        base = list(key)
-        for i in np.nonzero(any_fire)[0]:
-            val = round((int(ds[i]) + t_mic) / 1e6, 6)
-            tm = int(t_ms[i])
-            for side in ("high", "low"):
-                for rule, r in zip(("R1", "R2", "R3", "R4"),
-                                   fire[side]):
-                    if r[i]:
-                        outs.append(base + [tm, rule, side, val])
-        state.update(([int(x) for x in seq[-8:]],))
-        yield pd.DataFrame(outs, columns=cols)
-
-    return fn
+def _xchart_kernel(state, t, pdf, *, field, t_mic, s_mic):
+    """The four Western Electric rules over the ring-prefixed deviation
+    sequence: the per-event ring of a scalar fold is "the <=8 deviations
+    ending at position j", so every rule count becomes a cumulative-sum
+    difference.  State: the last eight micro-unit deviations."""
+    prior = list(state[0]) if state is not None else []
+    v = _f64(pdf, field)
+    ok = ~np.isnan(v)
+    n = int(ok.sum())
+    if not n:
+        return None, {}
+    # micro-unit deviations: element-wise Python round (half-even at
+    # 6dp, then the 1e6 pin) — EXACTLY the scalar fold's double rounding,
+    # which np.round does not reproduce for every double
+    ds = np.fromiter((int(round(round(float(x), 6) * 1e6)) - t_mic
+                      for x in v[ok]), dtype=np.int64, count=n)
+    t = t[ok]
+    # j is the absolute position of batch event i in (prior + batch);
+    # the j>=7 guard is the scalar len(ring)>=8 ring-full condition
+    seq = np.concatenate([np.asarray(prior, dtype=np.int64), ds])
+    j = np.arange(len(prior), len(seq))
+    fire: dict[str, tuple] = {}
+    for side, sgn in (("high", 1), ("low", -1)):
+        s = sgn * seq
+        c1 = np.concatenate([[0], np.cumsum(s > s_mic)])
+        c2 = np.concatenate([[0], np.cumsum(s > 2 * s_mic)])
+        cp = np.concatenate([[0], np.cumsum(s > 0)])
+        cur = s[j]
+        fire[side] = (
+            cur > 3 * s_mic,
+            (cur > 2 * s_mic)
+            & (c2[j + 1] - c2[np.maximum(j - 2, 0)] >= 2),
+            (cur > s_mic)
+            & (c1[j + 1] - c1[np.maximum(j - 4, 0)] >= 4),
+            (j >= 7) & (cp[j + 1] - cp[np.maximum(j - 7, 0)] >= 8),
+        )
+    out = {"t_ms": [], "rule": [], "side": [], "value": []}
+    for i in np.nonzero(np.logical_or.reduce(
+            [r for rules in fire.values() for r in rules]))[0]:
+        val = round((int(ds[i]) + t_mic) / 1e6, 6)
+        for side in ("high", "low"):
+            for rule, r in zip(("R1", "R2", "R3", "R4"), fire[side]):
+                if r[i]:
+                    out["t_ms"].append(int(t[i]))
+                    out["rule"].append(rule)
+                    out["side"].append(side)
+                    out["value"].append(val)
+    return ([int(x) for x in seq[-8:]],), {
+        "t_ms": np.array(out["t_ms"], dtype=np.int64),
+        "rule": np.array(out["rule"], dtype=object),
+        "side": np.array(out["side"], dtype=object),
+        "value": np.array(out["value"], dtype=np.float64)}
 
 
 def stream_xchart(
@@ -2621,22 +2098,12 @@ def stream_xchart(
         raise ValueError(f"sigma must be positive, got {sigma}")
     t_mic = int(round(float(target) * 1e6))
     s_mic = int(round(float(sigma) * 1e6))
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k_] for k_ in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType()),
-                      T.StructField("rule", T.StringType()),
-                      T.StructField("side", T.StringType()),
-                      T.StructField("value", T.DoubleType())])
-    state_schema = T.StructType(
-        [T.StructField("hist", T.ArrayType(T.LongType()))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _xchart_state_fn(field, keys, time_col, t_mic, s_mic, tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_scan(
+        sdf, partition_by, time_col, tiebreak,
+        [T.StructField("hist", T.ArrayType(T.LongType()))],
+        _longs("t_ms") + [T.StructField(c, T.StringType())
+                          for c in ("rule", "side")] + _doubles("value"),
+        partial(_xchart_kernel, field=field, t_mic=t_mic, s_mic=s_mic))
 
 
 # ---------------------------------------------------------------------------

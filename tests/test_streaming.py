@@ -5,12 +5,20 @@ operators genuinely cross micro-batch boundaries.
 """
 
 import json
+import math
 import os
+from functools import partial
 
+import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pypond_spark.functions import normalize_agg_spec
+from pypond_spark.streaming import stream as S
 from pypond_spark.streaming import (StreamPipeline, run_available_now,
                                     stream_fill_pad, stream_gaps,
                                     stream_rate, stream_sessions,
@@ -281,71 +289,6 @@ def test_stream_ewma_matches_batch(spark, tmp_path):
                        time_col="time").collect()
     bgot = {(r["user"], r["t_ms"]): r["value_ewma"] for r in brows}
     assert bgot == got
-
-
-def test_stream_ewma_tws_spike(spark, tmp_path):
-    """transformWithStateInPandas migration spike (r6 verdict item 8):
-    the StatefulProcessor twin must reproduce stream_ewma bit-for-bit
-    across micro-batch boundaries.  TWS needs the RocksDB state store
-    provider — set for this query's session and restored after — AND the
-    ``protobuf`` package (its Python<->JVM state server speaks protobuf;
-    absent in this sandbox, so the execution path is skipped here and the
-    plan-only construction is asserted instead — the documented migration
-    costs; see stream_ewma_tws docstring)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server requires protobuf")
-    from pypond_spark.streaming import run_available_now
-    from pypond_spark.streaming.stream import stream_ewma_tws
-    chunk1 = [{"t_ms": 0, "user": "a", "value": 10.0},
-              {"t_ms": 1_000, "user": "a", "value": 20.0}]
-    chunk2 = [{"t_ms": 2_000, "user": "a", "value": 40.0},
-              {"t_ms": 0, "user": "b", "value": 5.0}]
-    for i, chunk in enumerate([chunk1, chunk2]):
-        path = tmp_path / f"p{i}.json"
-        with open(path, "w") as fh:
-            for r in chunk:
-                fh.write(json.dumps(r) + "\n")
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    sdf = (spark.readStream.schema(SCHEMA)
-           .option("maxFilesPerTrigger", 1).json(str(tmp_path))
-           .withColumn("time", F.timestamp_millis(F.col("t_ms")))
-           .drop("t_ms"))
-    out = stream_ewma_tws(sdf, "value", alpha=0.5, partition_by=["user"])
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov, None)
-    spark.conf.set(prov, "org.apache.spark.sql.execution.streaming."
-                         "state.RocksDBStateStoreProvider")
-    try:
-        rows = run_available_now(out, "append").collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov)
-        else:
-            spark.conf.set(prov, prev)
-    got = {(r["user"], r["t_ms"]): r["value_ewma"] for r in rows}
-    # identical to test_stream_ewma_matches_batch's applyInPandasWithState
-    # goldens — the two APIs agree bit-for-bit
-    assert got == {("a", 0): 10.0, ("a", 1_000): 15.0,
-                   ("a", 2_000): 27.5, ("b", 0): 5.0}
-
-
-def test_stream_ewma_tws_constructs(spark, tmp_path):
-    """The TWS twin's logical plan builds without protobuf (only query
-    START needs the state server), so the flagged path is exercised up to
-    analysis in every environment: streaming flag, schema and grouping
-    all verified here; execution parity runs wherever protobuf exists
-    (test above)."""
-    from pypond_spark.streaming.stream import stream_ewma_tws
-    with open(tmp_path / "p.json", "w") as fh:
-        fh.write(json.dumps({"t_ms": 0, "user": "a", "value": 1.0}) + "\n")
-    sdf = (spark.readStream.schema(SCHEMA).json(str(tmp_path))
-           .withColumn("time", F.timestamp_millis(F.col("t_ms")))
-           .drop("t_ms"))
-    out = stream_ewma_tws(sdf, "value", alpha=0.5, partition_by=["user"],
-                          carry_cols=())
-    assert out.isStreaming
-    assert out.columns == ["user", "t_ms", "value_ewma"]
 
 
 def test_quality_exprs_work_on_streams(spark, tmp_path):
@@ -1154,6 +1097,44 @@ def test_simhash_py_unicode_whitespace_parity(spark):
         assert _simhash64_py(t) == batch[i], f"doc {i} diverged"
 
 
+def test_simhash_rowwise_trailing_tokenless_doc(spark):
+    """A 2048-document chunk ending in a token-less document: every
+    other document's halves still equal the scalar _simhash64_py (the
+    segment offsets must not shorten the previous document's tokens)."""
+    from pypond_spark.streaming.stream import _simhash64_py, simhash_rowwise
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
+             "theta", "iota", "kappa", "lambda", "mu"]
+    texts = [" ".join(words[(i * 7 + j * 5) % len(words)]
+                      for j in range(2 + i % 5)) for i in range(2047)]
+    texts.append(" \t ")
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string").coalesce(1)
+    got = {r["doc_id"]: (r["sim_hi"], r["sim_lo"])
+           for r in simhash_rowwise(df).collect()}
+    want = {i: _simhash64_py(t) for i, t in enumerate(texts)}
+    assert want.pop(2047) is None
+    assert got == want
+
+
+def test_minhash_bands_edge_control_chars_match_batch(spark):
+    """Control characters at a document's edges stay in its first/last
+    token on both engines: the batch tokenizer trims only U+0020 and
+    splits on the ASCII \\s class, so the Arrow engine must strip
+    nothing else."""
+    from pypond_spark.datapipe.dedup import lsh_band_buckets
+    from pypond_spark.streaming.stream import minhash_bands_rowwise
+    texts = ["\x01ab cd\x02", "\x1fone two three four\x1e",
+             " \x0bspaced\x0c out\x1c ", "\x7f del edges \x01",
+             "\u00a0nbsp edges too\u00a0", "\x01", "plain words here"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    stream = {(r["doc_id"], r["band"])
+              for r in minhash_bands_rowwise(df).collect()}
+    batch = {(r["doc_id"], r["band"])
+             for r in lsh_band_buckets(df, hash_fn="md5").collect()}
+    assert stream == batch
+
+
 def test_stream_minhash_dedup_cross_batch(spark, tmp_path):
     """MinHash-band claim state survives the checkpoint: batch 1 admits
     the original (claims both bands); batch 2's exact clone claims
@@ -1516,3 +1497,99 @@ def test_stream_attribution_outer_emits_unmatched_on_expiry(spark, tmp_path):
     assert sum(1 for r in rows if r[2] == 12) == 1
     with pytest.raises(ValueError, match="unmatched"):
         stream_attribution_join(views, clicks, unmatched="bogus")
+
+
+# ---------------------------------------------------------------------------
+# keyed-scan kernels: the cross-micro-batch contract, without Spark
+# ---------------------------------------------------------------------------
+
+_TWO = ["value", "v2"]
+_KERNELS = {
+    "rate": partial(S._rate_kernel, fields=_TWO, allow_negative=True,
+                    counter_wrap=None),
+    "rate_wrap": partial(S._rate_kernel, fields=["value"],
+                         allow_negative=True, counter_wrap=50.0),
+    "rate_nonneg": partial(S._rate_kernel, fields=["v2"],
+                           allow_negative=False, counter_wrap=None),
+    "gaps": partial(S._gaps_kernel, gap_ms=3000),
+    "sessions": partial(S._sessions_kernel, gap_ms=3000, fields=_TWO),
+    "throttle": partial(S._throttle_kernel, gap_ms=2500),
+    "transitions": partial(S._transitions_kernel, type_col="kind"),
+    "cumulative": partial(S._cum_kernel, rows_spec=normalize_agg_spec(
+        {"s": {"value": "sum"}, "n": {"value": "count"},
+         "lo": {"v2": "min"}, "hi": {"v2": "max"},
+         "a": {"value": "avg"}}), carry=["event_id"]),
+    "align_linear": partial(S._align_kernel, fields=_TWO, dur_ms=2000,
+                            method="linear", limit=None),
+    "align_hold": partial(S._align_kernel, fields=["value"],
+                          dur_ms=1500, method="hold", limit=2),
+    "fill_pad": partial(S._fill_kernel, fields=_TWO, method="pad",
+                        fill_limit=2),
+    "fill_zero": partial(S._fill_kernel, fields=["value"],
+                         method="zero", fill_limit=None),
+    "fill_linear": partial(S._fill_kernel, fields=["value"],
+                           method="linear", fill_limit=3),
+    "ewma": partial(S._ewma_kernel, fields=_TWO, alpha=0.3,
+                    carry=["event_id"]),
+    "holt": partial(S._holt_kernel, field="value", alpha=0.3,
+                    beta=0.2, carry=["event_id"]),
+    "holt_winters": partial(S._hw_kernel, field="value", period=3,
+                            alpha=0.3, beta=0.2, gamma=0.4, carry=[]),
+    "rolling": partial(S._buffer_kernel, rows_spec=normalize_agg_spec(
+        {"s": {"value": "sum"}, "n": {"value": "count"},
+         "sd": {"v2": "stddev"}, "md": {"value": "median"},
+         "z": {"v2": ("avg", "zero_missing")}}), dur_ms=5000,
+        zscore_threshold=None, carry=["event_id"]),
+    "zscore": partial(S._buffer_kernel,
+                      rows_spec=[(f, f, "zscore", "ignore_missing")
+                                 for f in _TWO],
+                      dur_ms=5000, zscore_threshold=1.0, carry=[]),
+    "cusum": partial(S._cusum_kernel, field="value", t_mic=100_000,
+                     k_mic=500_000, h_mic=20_000_000),
+    "xchart": partial(S._xchart_kernel, field="value", t_mic=0,
+                      s_mic=10_000_000),
+}
+
+
+_VALUES = st.one_of(st.just(float("nan")),
+                    st.floats(-100, 100, allow_nan=False))
+
+
+@st.composite
+def _cut_series(draw):
+    """Sorted distinct times, values with NaNs, and a cut index."""
+    t = sorted(draw(st.lists(st.integers(0, 100_000), min_size=2,
+                             max_size=30, unique=True)))
+    n = len(t)
+    pdf = pd.DataFrame({
+        "value": draw(st.lists(_VALUES, min_size=n, max_size=n)),
+        "v2": draw(st.lists(_VALUES, min_size=n, max_size=n)),
+        "kind": draw(st.lists(st.sampled_from(["a", "b", None]),
+                              min_size=n, max_size=n)),
+        "event_id": range(n),
+    })
+    return np.array(t, dtype=np.int64), pdf, draw(st.integers(1, n - 1))
+
+
+def _emitted(cols: dict, names) -> list:
+    return [[None if isinstance(x, float) and math.isnan(x) else x
+             for x in np.asarray(cols.get(c, ())).tolist()] for c in names]
+
+
+@pytest.mark.parametrize("name", sorted(_KERNELS))
+@settings(max_examples=60, deadline=None)
+@given(case=_cut_series())
+def test_kernel_split_equals_whole(name, case):
+    """For every keyed-scan kernel: one call over a series emits exactly
+    the rows of two calls over its halves with the first half's state
+    passed to the second — the contract every micro-batch boundary
+    relies on, checked on the pure kernels (no Spark)."""
+    kernel = _KERNELS[name]
+    t, pdf, cut = case
+    _, whole = kernel(None, t, pdf)
+    s1, first = kernel(None, t[:cut], pdf.iloc[:cut])
+    _, second = kernel(s1, t[cut:], pdf.iloc[cut:])
+    names = list(whole or first or second)
+    got = [a + b for a, b in zip(_emitted(first, names),
+                                 _emitted(second, names))]
+    assert got == _emitted(whole, names)

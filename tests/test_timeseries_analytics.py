@@ -555,6 +555,26 @@ def test_theil_sen_single_bucket_drops(spark):
     assert {r["k"] for r in out} == {"a"}  # no pair for 'b'
 
 
+@pytest.mark.parametrize("keys", [[], ["k"]])
+def test_theil_sen_null_time_row_is_dropped(spark, keys):
+    """A row with a NULL time has no bucket: the result equals the one
+    without that row, keyed (the numpy path) and keyless alike."""
+    from pypond_spark.operators.correlate import theil_sen
+    H = 3600_000
+    rows = [("a", i * H, 1.0 + 2.0 * i + (i % 3) * 0.25) for i in range(6)]
+    schema = "k string, ms long, value double"
+
+    def fit(data):
+        df = spark.createDataFrame(data, schema).select(
+            "k", F.timestamp_millis("ms").alias("time"), "value")
+        return sorted(theil_sen(df, "value", bucket="1h",
+                                partition_by=keys).collect())
+
+    want = fit(rows)
+    assert len(want) == 1 and want[0]["n_buckets"] == 6
+    assert fit(rows + [("a", None, 50.0)]) == want
+
+
 def test_rolling_correlation_exact_line(spark):
     from pypond_spark.operators.correlate import rolling_correlation
     # view = 2*click + 1 in every hour -> r = 1, beta = 2 at every pos
